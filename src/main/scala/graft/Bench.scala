@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   private val Runs = 3
 
@@ -47,7 +48,7 @@ object Bench {
         val df = spark.read.parquet(s"$sfDir/$t.parquet")
         df.agg(sum(hash(df.columns.map(df.col): _*).cast("long")))
           .write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     (System.nanoTime() - t0) / 1e9
   }

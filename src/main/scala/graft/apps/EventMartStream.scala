@@ -42,14 +42,14 @@ import graft.sinks.Sinks
   * non-decreasing (watermarked, key-partitioned delivery). The
   * order-independent marts (uv/ohlc/decay) do not need it.
   *
-  * Every mart table is SNAPSHOT-MANAGED (`snapshotted = true` on each
-  * [[Sinks]] mutation): writes journal + install + commit through the
+  * Every mart table is SNAPSHOT-MANAGED, as every [[Sinks]] keyed table
+  * is: writes journal + install + commit through the
   * [[Snapshots]] manifest tier, so a reader that plans mid-batch sees
   * the PRE-batch table (its pinned files outlive the commit by two
   * more commits — the grace window, wide enough to cover a batch that
   * commits a table twice: merge + retention sweep) and one that plans
   * after the commit sees the post-batch table — never a mix of
-  * swapped and unswapped buckets, never a just-deleted file.
+  * pre- and post-batch buckets, never a just-deleted file.
   *
   * [[Retention]] bounds the keyed state (the reference bounds every
   * keyed state with TTL — 1 d UV, 5 s dedup; W7 in SURVEY §2):
@@ -426,8 +426,7 @@ object EventMartStream {
         .as("cur_date"), col("user_id"))
       .agg(count(lit(1)).as("pv"))
     mutate(Sinks.upsertCombine(spark, uvDelta, Seq("cur_date", "user_id"),
-      Seq(sum(col("pv")).as("pv")), mainStamp(batchId), s"$martDir/uv_days",
-      snapshotted = true))
+      Seq(sum(col("pv")).as("pv")), mainStamp(batchId), s"$martDir/uv_days"))
 
     val ohlcDelta = ev
       .groupBy(date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd")
@@ -441,7 +440,7 @@ object EventMartStream {
       Seq(min(col("o")).as("o"), max(col("high")).as("high"),
         min(col("low")).as("low"), max(col("c")).as("c"),
         sum(col("n")).as("n")),
-      mainStamp(batchId), s"$martDir/ohlc", snapshotted = true))
+      mainStamp(batchId), s"$martDir/ohlc"))
 
     val decayDelta = ev
       .groupBy(col("user_id"),
@@ -450,7 +449,7 @@ object EventMartStream {
         sum(floor(col("value") * lit(1048576L)).cast("long")).as("bfp"))
     mutate(Sinks.upsertCombine(spark, decayDelta, Seq("user_id", "__w"),
       Seq(sum(col("n")).as("n"), sum(col("bfp")).as("bfp")),
-      mainStamp(batchId), s"$martDir/decay_weeks", snapshotted = true))
+      mainStamp(batchId), s"$martDir/decay_weeks"))
 
     // ---- transitions: pairs from (pre-batch last-event state ∪ batch) ----
     // state reads are BUCKET-PRUNED to the batch's users (readKeyedFor)
@@ -476,7 +475,7 @@ object EventMartStream {
     }
     mutate(Sinks.upsertCombine(spark, transDelta,
       Seq("prev_type", "curr_type"), Seq(sum(col("n")).as("n")),
-      mainStamp(batchId), s"$martDir/trans_counts", snapshotted = true))
+      mainStamp(batchId), s"$martDir/trans_counts"))
     val lastPerUser = ev
       .groupBy(col("user_id"))
       .agg(max(struct(unix_micros(col("ts")).as("us"),
@@ -484,7 +483,7 @@ object EventMartStream {
       .select(col("user_id"), col("m.us").as("us"), col("m.eid").as("eid"),
         col("m.typ").as("typ"))
     mutate(Sinks.upsertKeyed(spark, lastPerUser, Seq("user_id"),
-      Seq("us", "eid"), s"$martDir/trans_state", snapshotted = true))
+      Seq("us", "eid"), s"$martDir/trans_state"))
 
     // ---- sessions: fold (open-session state ∪ batch) per user ----------
     // Closed sessions AND the new open states both derive from
@@ -530,12 +529,11 @@ object EventMartStream {
       Seq("entry_type", "exit_type"),
       Seq(sum(col("n_sessions")).as("n_sessions"),
         sum(col("n_events")).as("n_events")),
-      mainStamp(batchId), s"$martDir/sess_grid", snapshotted = true))
+      mainStamp(batchId), s"$martDir/sess_grid"))
     val open = sessDelta.filter(col("open"))
       .select("user_id", "entry_type", "exit_type", "last_us", "last_eid", "ne")
     mutate(Sinks.upsertKeyed(spark, open, Seq("user_id"),
-      Seq("last_us", "last_eid"), s"$martDir/sess_state",
-      snapshotted = true))
+      Seq("last_us", "last_eid"), s"$martDir/sess_state"))
     // REPLAY GUARD for the advance below: if sess_grid already carries
     // a stamp PAST this batch's main stamp, the crashed original run
     // got as far as this batch's TTL fold merge — the replayed main
@@ -630,8 +628,7 @@ object EventMartStream {
           .withColumn("__w", lit(SentinelWeek)),
         keys = Seq("user_id", "__w"),
         combine = Seq(sum(col("n")).as("n"), sum(col("bfp")).as("bfp"),
-          max(col("__mart_batch")).as("__mart_batch")),
-        snapshotted = true))
+          max(col("__mart_batch")).as("__mart_batch"))))
     }
     if ((retention.sessTtlUs.isDefined || retention.transTtlUs.isDefined)
         && batchId % math.max(1, retention.ttlSweepEveryN) == 0) {
@@ -666,9 +663,8 @@ object EventMartStream {
             Seq("entry_type", "exit_type"),
             Seq(sum(col("n_sessions")).as("n_sessions"),
               sum(col("n_events")).as("n_events")),
-            foldStamp(batchId), s"$martDir/sess_grid", snapshotted = true))
-          mutate(Sinks.deleteWhere(spark, statePath, idle,
-            snapshotted = true))
+            foldStamp(batchId), s"$martDir/sess_grid"))
+          mutate(Sinks.deleteWhere(spark, statePath, idle))
           // the fold pair is complete: the expiring sessions now live
           // in exactly one member. This advance closes the r10-graded
           // double-count window — a sessionPaths planned between the
@@ -689,7 +685,7 @@ object EventMartStream {
       }
       retention.transTtlUs.foreach { ttl =>
         mutate(Sinks.deleteWhere(spark, s"$martDir/trans_state",
-          col("us") <= maxSeenUs - ttl, snapshotted = true))
+          col("us") <= maxSeenUs - ttl))
       }
     }
 
@@ -805,7 +801,7 @@ object EventMartStream {
                               empty: => DataFrame): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // "exists" is not enough: during the first swap the table dir can
+    // "exists" is not enough: during the first write the table dir can
     // exist while still holding zero bucket dirs / zero data files,
     // and a raw read would then throw UNABLE_TO_INFER_SCHEMA — probe
     // for at least one visible data file before planning the read

@@ -47,8 +47,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * The reference has no file-layout tier at all; the shape here is the
   * log-structured-table lineage (Iceberg/Delta snapshot + expiry),
   * scoped to exactly what a serving index needs. (`private[graft]`:
-  * the keyed-sink tier in [[graft.sinks.Sinks]] shares this manifest
-  * machinery for its snapshot-managed mart tables.) */
+  * the keyed-sink tier in [[graft.sinks.Sinks]] commits every keyed
+  * table through this manifest machinery.) */
 private[graft] object Snapshots {
 
   private def snapDir(root: Path) = new Path(root, "_snap")

@@ -55,16 +55,6 @@ object VectorFunctions {
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb))
   }
 
-  /** L2 (Euclidean) distance. */
-  def l2(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val diff = x.cast("double") - y.cast("double")
-        diff * diff
-      }),
-      lit(0.0),
-      (acc, x) => acc + x))
-
   /** Sign-bit LSH key: for each seed hyperplane (given as a literal matrix
     * of doubles), emit 1 if dot(v, plane) >= 0 — concatenated to a bit
     * string usable as an ANN bucket id. Deterministic, oracle-portable. */

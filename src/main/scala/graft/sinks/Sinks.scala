@@ -23,6 +23,12 @@ import graft.operators.DedupOps
   *    — same merge, keyed by table+rowkey)
   *  - K7 debug/print sink             (`print()` calls throughout the apps)
   *
+  * Every keyed table (K3/K4 and the mart tier) commits through ONE
+  * protocol: the [[Snapshots]] manifest. A mutation stages its touched
+  * buckets, journals the intent, installs the staged files and commits
+  * a new manifest version — table-atomic under crashes and for
+  * concurrent readers (see [[upsertKeyed]]).
+  *
   * Exactly-once (R1/R2): streaming variants take a mandatory checkpoint
   * directory. `streamAppend` rides the file-sink commit log; `streamUpsert`
   * folds the batch id into the merge order so replays are idempotent;
@@ -32,10 +38,6 @@ import graft.operators.DedupOps
   * paths are asserted in `SinksSpec`.
   */
 object Sinks {
-
-  /** K1 — append to a fixed target. */
-  def appendFixed(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
 
   /** K2 — per-record dynamic routing: the target directory comes from a
     * COLUMN (`partitionBy`), one pass, no per-target scan. Hive-style
@@ -78,43 +80,42 @@ object Sinks {
     *   1. computes the incoming rows' buckets (every key lives in exactly
     *      one bucket, so keep-last within touched buckets is globally
     *      correct),
-    *   2. reads ONLY the touched buckets (partition-pruned scan),
+    *   2. reads ONLY the touched buckets' current files, as the
+    *      [[Snapshots]] manifest lists them,
     *   3. merges + keep-lasts them (union → row_number, one shuffle over
     *      touched-bucket data, not the table),
-    *   4. stages the result partitioned by bucket, then swaps each touched
-    *      bucket directory into place by rename.
+    *   4. stages the result partitioned by bucket and commits it through
+    *      [[stageAndInstall]]: the staged files replace the touched
+    *      buckets' files in ONE manifest commit.
     * Untouched buckets are never read or written — cost scales with
     * O(batch ∪ touched buckets), not O(table), which is what lets a
     * continuously-running stream upsert survive a 100 TB table. (A
     * transactional table format's MERGE INTO is the managed version of
     * exactly this.)
     *
-    * Crash safety: the staging write completes before any live mutation;
-    * each bucket swap is the move-aside / promote / drop-old sequence of
-    * [[overwriteSwapped]] with the `.old` copy held OUTSIDE the table root
-    * (a `__bucket=5.old` dir inside it would poison partition discovery).
-    * A crash between bucket swaps leaves some buckets new and some old —
-    * re-applying the batch (streaming replay does this) converges, because
-    * the merge is idempotent under `order` (callers fold the batch id into
-    * `order`). Leftover `.old` dirs from a crash are healed at the start
-    * of the next merge. */
+    * Crash safety and isolation: the commit is table-atomic. A crash at
+    * any point leaves the previous manifest current, and the next
+    * writer's [[locked]] entry heals the journal to exactly the pre- or
+    * post-batch table; re-applying the batch (streaming replay does
+    * this) then converges, because the merge is idempotent under
+    * `order` (callers fold the batch id into `order`). A reader planned
+    * before the commit keeps its resolved files for two more commits;
+    * one planned after sees exactly the post-batch table. */
   def upsertKeyed(spark: SparkSession, incoming: DataFrame, keys: Seq[String],
                   order: Seq[String], path: String,
                   dropCols: Seq[String] = Nil,
-                  nBuckets: Int = DefaultUpsertBuckets,
-                  snapshotted: Boolean = false): Unit = {
+                  nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path, snapMode(fs, path, snapshotted)) { snap =>
+    locked(fs, path) {
       upsertKeyedBody(spark, fs, incoming, keys, order, path, dropCols,
-        nBuckets, snap)
+        nBuckets)
     }
   }
 
   private def upsertKeyedBody(spark: SparkSession, fs: FileSystem,
                               incoming: DataFrame, keys: Seq[String],
                               order: Seq[String], path: String,
-                              dropCols: Seq[String], nBuckets: Int,
-                              snap: Boolean): Unit = {
+                              dropCols: Seq[String], nBuckets: Int): Unit = {
     // the layout is self-describing: the bucket count is recorded at
     // table creation and every later merge USES THE RECORDED VALUE — a
     // caller passing a different nBuckets would otherwise hash keys into
@@ -124,85 +125,87 @@ object Sinks {
     val touched = withB.select("__bucket").distinct()
       .collect().map(_.getInt(0)).sorted // ≤ nBuckets values, driver-safe
     if (touched.isEmpty) return
-    val current = liveTouched(spark, fs, path, touched.toIndexedSeq, snap)
-    val merged = current match {
+    val merged = liveTouched(spark, fs, path, touched.toIndexedSeq) match {
       case Some(cur) => cur.unionByName(withB, allowMissingColumns = true)
       case None => withB
     }
     val deduped = DedupOps.keepLast(merged, keys.map(col), order.map(col))
       .drop(dropCols: _*)
-    if (snap) stageAndInstall(spark, fs, path, deduped, touched.toIndexedSeq)
-    else stageAndSwap(fs, path, deduped, touched.toIndexedSeq)
+    stageAndInstall(spark, fs, path, deduped, touched.toIndexedSeq)
   }
 
-  /** A table is SNAPSHOT-MANAGED once it has a committed [[Snapshots]]
-    * manifest — detected, not just requested: after the first manifest
-    * commit every write MUST stay on the snapshot path (a raw bucket
-    * swap would leave the previous commit's retired grace-window files
-    * visible to raw readers, duplicating their rows). Requesting
-    * `snapshotted` on an existing raw table upgrades it with one
-    * bootstrap commit adopting the current files as version 1. */
-  private def snapMode(fs: FileSystem, path: String,
-                       requested: Boolean): Boolean =
-    requested || Snapshots.currentFiles(fs, new Path(path)).isDefined
-
-  /** Run a mutation in the detected mode. Snapshot mode takes the
-    * table's single-writer lock first (the [[Snapshots]] contract —
-    * "the snapshot layer never writes outside it": a second concurrent
-    * writer must fail loudly, not interleave pending journals and
-    * manifest versions), then heals any torn previous write —
-    * staged-install first (its journaled files must be
-    * all-present-or-none before the snapshot heal can adjudicate the
-    * pending journal), then the journal, then the bootstrap commit if
-    * the table predates its management. Legacy mode only heals `.old`
-    * bucket leftovers, as before. */
-  private def locked(fs: FileSystem, path: String, snap: Boolean)(
-      body: Boolean => Unit): Unit = {
-    healBuckets(fs, path) // legacy `.old` leftovers (pre-snapshot crashes)
-    if (snap) StagedCommit.withWriterLock(fs, new Path(path)) {
-      val root = new Path(path)
+  /** Run a keyed-table mutation under the table's single-writer lock
+    * (the [[Snapshots]] contract — a second concurrent writer must fail
+    * loudly, not interleave pending journals and manifest versions),
+    * after healing any torn previous write: staged-install first (its
+    * journaled files must be all-present-or-none before the snapshot
+    * heal can adjudicate the pending journal), then the journal. A
+    * table without a manifest — a new table, or a raw bucket layout
+    * written by an older version — is adopted by one bootstrap commit
+    * that lists its current files as version 1. */
+  private def locked(fs: FileSystem, path: String)(body: => Unit): Unit = {
+    val root = new Path(path)
+    StagedCommit.withWriterLock(fs, root) {
       StagedCommit.heal(fs, new Path(path + ".staging"))
       Snapshots.heal(fs, root)
-      if (Snapshots.currentFiles(fs, root).isEmpty && fs.exists(root)) {
+      if (Snapshots.currentFiles(fs, root).isEmpty) {
+        adoptLegacyOld(fs, path)
         Snapshots.commit(fs, root); ()
       }
-      body(true)
-    } else body(false)
+      body
+    }
   }
 
-  /** The current rows of `path`'s touched buckets. Snapshot mode reads
-    * through the manifest — never the raw directories, which may also
-    * hold the previous commit's retired (grace-window) files. */
+  /** Settle `<table>.old`, the aside dir of an older version's raw
+    * bucket swap (move live aside → promote staged → drop aside), before
+    * the bootstrap commit lists the table: a `__bucket=N` aside whose
+    * live dir is missing is the last copy of that bucket — restore it;
+    * one whose live dir exists is stale — drop it. The emptied dir
+    * (which those swaps never removed) goes too. Hadoop reports a
+    * failed rename by returning false, and the delete after it would
+    * then destroy the last copy, so the restore is checked. */
+  private def adoptLegacyOld(fs: FileSystem, path: String): Unit = {
+    val old = new Path(path + ".old")
+    if (!fs.exists(old)) return
+    fs.listStatus(old).foreach { st =>
+      val live = new Path(path, st.getPath.getName)
+      if (fs.exists(live)) fs.delete(st.getPath, true)
+      else if (!fs.rename(st.getPath, live))
+        throw new java.io.IOException(s"restore ${st.getPath} failed for $live")
+    }
+    fs.delete(old, true)
+  }
+
+  /** The current rows of `path`'s touched buckets, read through the
+    * manifest — never the raw directories, which may also hold the
+    * previous commits' retired (grace-window) files. */
   private def liveTouched(spark: SparkSession, fs: FileSystem, path: String,
-                          touched: Seq[Int], snap: Boolean)
-      : Option[DataFrame] = {
+                          touched: Seq[Int]): Option[DataFrame] = {
     val root = new Path(path)
-    val dirs =
-      if (snap) {
-        val names = touched.map(b => s"__bucket=$b").toSet
-        Snapshots.currentFiles(fs, root).getOrElse(Nil)
-          .filter(f => names.contains(f.takeWhile(_ != '/')))
-          .map(p => new Path(root, p).toString)
-      } else touched.map(b => new Path(path, s"__bucket=$b"))
-        .filter(fs.exists).map(_.toString)
-    if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", path).parquet(dirs: _*))
+    val names = touched.map(b => s"__bucket=$b").toSet
+    val files = Snapshots.currentFiles(fs, root).getOrElse(Nil)
+      .filter(f => names.contains(f.takeWhile(_ != '/')))
+      .map(p => new Path(root, p).toString)
+    if (files.isEmpty) None
+    else Some(spark.read.option("basePath", path).parquet(files: _*))
   }
 
-  /** Snapshot-mode twin of [[stageAndSwap]]: stage `df` partitioned by
-    * bucket, journal the intent, install the staged files ALONGSIDE the
-    * live ones (all-or-nothing through a [[StagedCommit]] manifest —
-    * staged part-file names carry a per-job UUID, so they never collide
-    * with live files), then snapshot-commit: the staged files become
-    * the touched buckets' data and the replaced originals RETIRE,
-    * outliving the commit by two more commits (the readers' grace
-    * window, same contract as [[graft.apps.Compaction]]'s snapshot
-    * groups). A reader that planned before the commit keeps every file
-    * it resolved; one that plans after sees exactly the post-batch
-    * table — pre- or post-batch state, never a mix, never a deleted
-    * file. Crash-safe via [[locked]]'s heal-first discipline: the
-    * pending journal is either aborted (nothing installed) or
-    * completed (everything installed) on the next writer entry. */
+  /** THE commit of every keyed-table mutation: stage `df` (which must
+    * carry `__bucket`) partitioned by bucket, journal the intent,
+    * install the staged files ALONGSIDE the live ones (all-or-nothing
+    * through a [[StagedCommit]] manifest — staged part-file names carry
+    * a per-job UUID, so they never collide with live files), then
+    * snapshot-commit: the staged files become the `buckets`' data and
+    * the replaced originals RETIRE, outliving the commit by two more
+    * commits (the readers' grace window, same contract as
+    * [[graft.apps.Compaction]]'s snapshot groups). A targeted bucket
+    * with NO staged output (every row removed) simply loses its files.
+    * A reader that planned before the commit keeps every file it
+    * resolved; one that plans after sees exactly the post-batch table —
+    * pre- or post-batch state, never a mix, never a deleted file.
+    * Crash-safe via [[locked]]'s heal-first discipline: the pending
+    * journal is either aborted (nothing installed) or completed
+    * (everything installed) on the next writer entry. */
   private def stageAndInstall(spark: SparkSession, fs: FileSystem,
                               path: String, df: DataFrame,
                               buckets: Seq[Int],
@@ -241,35 +244,36 @@ object Sinks {
     * reads ONLY the touched buckets, re-aggregates (live ∪ delta) by
     * `keys` with the caller's `combine` aggregates (which must be
     * associative+commutative — sums, min/max, struct-argmin/argmax),
-    * and swaps the touched bucket dirs. Untouched buckets are never
-    * read or written — O(batch ∪ touched buckets), never O(table).
+    * and commits the touched buckets through [[stageAndInstall]] like
+    * [[upsertKeyed]]. Untouched buckets are never read or written —
+    * O(batch ∪ touched buckets), never O(table).
     *
     * EXACTLY-ONCE under replay: an additive merge is not naturally
     * idempotent (applying a delta twice double-counts), so every
     * merged row carries `__mart_batch` = the max batch id that touched
     * it, and a bucket whose live rows already show this batch id is
-    * SKIPPED — the bucket-dir swap is atomic, so after a crash each
-    * touched bucket is either fully merged (stamped, skipped on
+    * SKIPPED. The commit is table-atomic, so after a crash the heal
+    * leaves every touched bucket either merged (stamped, skipped on
     * replay) or untouched (re-merged), and the replay converges with
-    * no double count. Callers must pass the streaming micro-batch id
+    * no double count. The check is per bucket, so it also holds for a
+    * legacy raw table adopted after a crash that left some of its
+    * buckets merged. Callers must pass the streaming micro-batch id
     * (monotone per checkpoint; a replayed batch reuses its id with
     * identical content — the foreachBatch contract). */
   def upsertCombine(spark: SparkSession, delta: DataFrame, keys: Seq[String],
                     combine: Seq[Column], batchId: Long, path: String,
-                    nBuckets: Int = DefaultUpsertBuckets,
-                    snapshotted: Boolean = false): Unit = {
+                    nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path, snapMode(fs, path, snapshotted)) { snap =>
+    locked(fs, path) {
       upsertCombineBody(spark, fs, delta, keys, combine, batchId, path,
-        nBuckets, snap)
+        nBuckets)
     }
   }
 
   private def upsertCombineBody(spark: SparkSession, fs: FileSystem,
                                 delta: DataFrame, keys: Seq[String],
                                 combine: Seq[Column], batchId: Long,
-                                path: String, nBuckets: Int,
-                                snap: Boolean): Unit = {
+                                path: String, nBuckets: Int): Unit = {
     val effectiveBuckets = readOrWriteBucketCount(fs, path, nBuckets)
     val withB = delta
       .withColumn("__bucket", bucketOf(keys, effectiveBuckets))
@@ -278,7 +282,7 @@ object Sinks {
       .collect().map(_.getInt(0)).sorted // ≤ nBuckets values, driver-safe
     if (touched.isEmpty) return
     val (skip, current) =
-      liveTouched(spark, fs, path, touched.toIndexedSeq, snap) match {
+      liveTouched(spark, fs, path, touched.toIndexedSeq) match {
         case Some(live) =>
           // buckets stamped with this batch id OR LATER are fully merged
           // (stamps apply in strictly increasing order per table, and the
@@ -304,15 +308,15 @@ object Sinks {
       .groupBy((keys :+ "__bucket").map(col): _*)
       .agg(combine.head, combine.tail :+
         max(col("__mart_batch")).as("__mart_batch"): _*)
-    if (snap) stageAndInstall(spark, fs, path, combined, todo.toIndexedSeq)
-    else stageAndSwap(fs, path, combined, todo.toIndexedSeq)
+    stageAndInstall(spark, fs, path, combined, todo.toIndexedSeq)
   }
 
   /** Read a table written by [[upsertCombine]] without its layout and
-    * replay-stamp columns. Snapshot-managed tables are read through
-    * their newest manifest (file list pinned at PLAN time — a writer
-    * committing mid-query cannot tear the read or delete a referenced
-    * file inside the grace window); raw tables read as before. */
+    * replay-stamp columns, through its newest manifest (file list
+    * pinned at PLAN time — a writer committing mid-query cannot tear
+    * the read or delete a referenced file inside the grace window). A
+    * legacy raw table not yet adopted by a write reads its
+    * directories. */
   def readCombined(spark: SparkSession, path: String): DataFrame =
     Snapshots.readTable(spark, new Path(path))
       .drop("__bucket", "__mart_batch")
@@ -329,26 +333,6 @@ object Sinks {
   def readKeyedAt(spark: SparkSession, path: String,
                   version: Int): DataFrame =
     Snapshots.readTableAt(spark, new Path(path), version).drop("__bucket")
-
-  /** Stage `df` (which must carry `__bucket`) partitioned by bucket, then
-    * swap exactly the `buckets` dirs into the live table. A targeted
-    * bucket with NO staged output (every row removed) has its live dir
-    * dropped. */
-  private def stageAndSwap(fs: FileSystem, path: String,
-                           df: DataFrame, buckets: Seq[Int]): Unit = {
-    val staging = new Path(path + ".staging")
-    df.write.mode("overwrite").partitionBy("__bucket")
-      .parquet(staging.toString)
-    fs.mkdirs(new Path(path))
-    buckets.foreach { b =>
-      val staged = new Path(staging, s"__bucket=$b")
-      val live = new Path(path, s"__bucket=$b")
-      if (fs.exists(staged))
-        swapDir(fs, staged, live, new Path(path + ".old", s"__bucket=$b"))
-      else if (fs.exists(live)) fs.delete(live, true)
-    }
-    fs.delete(staging, true)
-  }
 
   /** K4 compaction — drop tombstones older than `olderThan` (the
     * pipeline's out-of-orderness bound: a tombstone only needs to outlive
@@ -369,24 +353,18 @@ object Sinks {
     * NOT matching and kept. Idempotent: re-running after a crash finds
     * the already-deleted rows gone and rewrites nothing. */
   def deleteWhere(spark: SparkSession, path: String,
-                  predicate: Column,
-                  snapshotted: Boolean = false): Unit = {
+                  predicate: Column): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path, snapMode(fs, path, snapshotted)) { snap =>
-      val table = if (snap) Snapshots.readTable(spark, new Path(path))
-                  else spark.read.parquet(path)
+    locked(fs, path) {
       val hit = coalesce(predicate, lit(false))
-      val affected = table.filter(hit)
+      val affected = Snapshots.readTable(spark, new Path(path)).filter(hit)
         .select("__bucket").distinct().collect().map(_.getInt(0)).sorted
       if (affected.nonEmpty)
-        liveTouched(spark, fs, path, affected.toIndexedSeq, snap)
-          .foreach { live =>
-            val kept = live.filter(!hit)
-            if (snap) stageAndInstall(spark, fs, path, kept,
-              affected.toIndexedSeq)
-            else stageAndSwap(fs, path, kept, affected.toIndexedSeq)
-          }
+        liveTouched(spark, fs, path, affected.toIndexedSeq).foreach { live =>
+          stageAndInstall(spark, fs, path, live.filter(!hit),
+            affected.toIndexedSeq)
+        }
     }
   }
 
@@ -405,14 +383,12 @@ object Sinks {
     * stamp: once applied, `predicate` matches nothing. */
   def migrateWhere(spark: SparkSession, path: String, predicate: Column,
                    migrate: DataFrame => DataFrame,
-                   keys: Seq[String], combine: Seq[Column],
-                   snapshotted: Boolean = false): Unit = {
+                   keys: Seq[String], combine: Seq[Column]): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path, snapMode(fs, path, snapshotted)) { snap =>
+    locked(fs, path) {
       val n = readOrWriteBucketCount(fs, path, DefaultUpsertBuckets)
-      val table = if (snap) Snapshots.readTable(spark, new Path(path))
-                  else spark.read.parquet(path)
+      val table = Snapshots.readTable(spark, new Path(path))
       val hit = coalesce(predicate, lit(false))
       val srcBuckets = table.filter(hit)
         .select("__bucket").distinct().collect().map(_.getInt(0))
@@ -428,13 +404,12 @@ object Sinks {
         val dstBuckets = moved
           .select("__bucket").distinct().collect().map(_.getInt(0))
         val touched = (srcBuckets ++ dstBuckets).distinct.sorted.toIndexedSeq
-        val kept = liveTouched(spark, fs, path, touched, snap)
+        val kept = liveTouched(spark, fs, path, touched)
           .map(_.filter(!hit)).getOrElse(moved.limit(0))
         val merged = kept.unionByName(moved, allowMissingColumns = true)
           .groupBy((keys :+ "__bucket").map(col): _*)
           .agg(combine.head, combine.tail: _*)
-        if (snap) stageAndInstall(spark, fs, path, merged, touched)
-        else stageAndSwap(fs, path, merged, touched)
+        stageAndInstall(spark, fs, path, merged, touched)
       }
     }
   }
@@ -451,7 +426,7 @@ object Sinks {
     *  - rows are read through the pinned manifest, re-assigned
     *    `__bucket = stable60(key) % newN`, staged, and installed via
     *    the same pending-journal → all-or-nothing install → snapshot
-    *    commit path every snapshot mutation uses;
+    *    commit path every keyed mutation uses;
     *  - the new bucket COUNT rides the commit itself (the manifest's
     *    `nbuckets` line), so count and layout flip in ONE rename —
     *    every later merge, prune, and `readKeyedFor` resolves the
@@ -464,15 +439,15 @@ object Sinks {
     *    old-everything or new-everything (the pending journal carries
     *    the count, so even the heal's commit flips both together).
     *
-    * REQUIRES a snapshot-managed table, refusing raw layouts loudly: a
-    * raw table's crash contract is per-bucket replay (a crashed batch
-    * leaves some buckets merged-and-stamped and others not, and the
-    * replay converges because each bucket is an independent replay
-    * unit) — re-hashing would mix stamped and unstamped keys into one
-    * NEW bucket, whose stamp would then mask the unmerged keys' delta
-    * on replay, losing it silently. Replay any in-flight batch on the
-    * raw layout, upgrade with one `snapshotted = true` write (whose
-    * mutations are table-atomic, so the mixed state cannot recur),
+    * REQUIRES a snapshot-managed table, refusing a legacy raw layout
+    * (written by an older version, before the snapshot manifest was
+    * the only protocol) loudly: a raw table's crash contract was
+    * per-bucket replay (a crashed batch left some buckets
+    * merged-and-stamped and others not) — re-hashing would mix stamped
+    * and unstamped keys into one NEW bucket, whose stamp would then
+    * mask the unmerged keys' delta on replay, losing it silently.
+    * Replay any in-flight batch, let one ordinary write adopt the table
+    * (its mutations are table-atomic, so the mixed state cannot recur),
     * then rebucket. Keys are needed to re-hash: pass the table's key
     * columns. */
   def rebucket(spark: SparkSession, path: String, keys: Seq[String],
@@ -485,8 +460,8 @@ object Sinks {
         "bucket layout whose crashed batches replay PER BUCKET — " +
         "re-hashing could merge a replayed bucket's stamp over an " +
         "unreplayed key's delta. Replay any in-flight batch, write " +
-        "once with snapshotted = true to upgrade, then rebucket.")
-    locked(fs, path, snap = true) { _ =>
+        "once to upgrade, then rebucket.")
+    locked(fs, path) {
       val oldN = readOrWriteBucketCount(fs, path, DefaultUpsertBuckets)
       if (oldN != newN) {
         val curFiles = Snapshots.currentFiles(fs, new Path(path))
@@ -547,9 +522,9 @@ object Sinks {
       s"setCompactionTarget: $path does not exist")
     require(Snapshots.currentFiles(fs, new Path(path)).isDefined,
       s"setCompactionTarget requires a snapshot-managed table; $path " +
-        "has no manifest to carry the setting — write once with " +
-        "snapshotted = true to upgrade first.")
-    locked(fs, path, snap = true) { _ =>
+        "has no manifest to carry the setting — write once to " +
+        "upgrade first.")
+    locked(fs, path) {
       Snapshots.commit(fs, new Path(path), targetBytes = Some(bytes)); ()
     }
   }
@@ -683,17 +658,27 @@ object Sinks {
     * join/filter exactly; this is the pruning step that keeps a
     * per-batch state lookup O(touched buckets), never O(table)).
     * `forKeys` must be a small frame (its distinct buckets are
-    * collected — ≤ nBuckets values). */
+    * collected — ≤ nBuckets values). A legacy raw table not yet
+    * adopted by a write reads its touched bucket dirs: it has no
+    * retired files, so the dirs hold exactly its rows. */
   def readKeyedFor(spark: SparkSession, path: String,
                    forKeys: DataFrame, keys: Seq[String]): Option[DataFrame] = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path))) return None
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return None
     val n = readOrWriteBucketCount(fs, path, DefaultUpsertBuckets)
     val touched = forKeys.select(bucketOf(keys, n).as("__b"))
-      .distinct().collect().map(_.getInt(0))
-    val snap = Snapshots.currentFiles(fs, new Path(path)).isDefined
-    liveTouched(spark, fs, path, touched.toIndexedSeq, snap)
-      .map(_.drop("__bucket"))
+      .distinct().collect().map(_.getInt(0)).toIndexedSeq
+    val live =
+      if (Snapshots.currentFiles(fs, root).isDefined)
+        liveTouched(spark, fs, path, touched)
+      else {
+        val dirs = touched.map(b => new Path(root, s"__bucket=$b"))
+          .filter(fs.exists).map(_.toString)
+        if (dirs.isEmpty) None
+        else Some(spark.read.option("basePath", path).parquet(dirs: _*))
+      }
+    live.map(_.drop("__bucket"))
   }
 
   /** The table's recorded bucket count, creating the marker on first
@@ -701,7 +686,7 @@ object Sinks {
     * when present — it commits ATOMICALLY with the layout it describes
     * ([[rebucket]]); the sidecar `.nbuckets` file beside the table
     * (not inside it — partition discovery must only see `__bucket=`
-    * dirs) covers raw tables and pre-rebucket manifests. */
+    * dirs) covers tables never rebucketed. */
   private def readOrWriteBucketCount(fs: FileSystem, path: String,
                                      requested: Int): Int =
     Snapshots.currentBucketCount(fs, new Path(path)).getOrElse {
@@ -718,52 +703,6 @@ object Sinks {
         requested
       }
     }
-
-  /** Promote `staged` over `live` via move-aside → promote → drop-old:
-    * no point in this sequence has zero live copies on disk. Hadoop FS
-    * mutations report failure by RETURNING false, not throwing — an
-    * unchecked rename followed by a delete would silently destroy the
-    * only copy, so every step is checked. */
-  private def swapDir(fs: FileSystem, staged: Path, live: Path, old: Path): Unit = {
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"$what failed for $live")
-    fs.mkdirs(old.getParent)
-    if (fs.exists(old)) {
-      // leftover from a crash inside a previous swap: only safe to drop
-      // when a live copy exists; otherwise it IS the last copy — restore
-      if (fs.exists(live)) must(fs.delete(old, true), "delete stale .old")
-      else must(fs.rename(old, live), "restore .old")
-    }
-    val hadLive = fs.exists(live)
-    if (hadLive) must(fs.rename(live, old), "move live aside")
-    must(fs.rename(staged, live), "promote staged")
-    if (hadLive) must(fs.delete(old, true), "drop old")
-  }
-
-  /** Heal bucket dirs orphaned by a crash mid-swap: a `.old` copy whose
-    * live dir is missing is the last copy — restore it; one whose live dir
-    * exists is stale — drop it. Runs on the (tiny) `.old` listing only. */
-  private def healBuckets(fs: FileSystem, path: String): Unit = {
-    val oldRoot = new Path(path + ".old")
-    if (!fs.exists(oldRoot)) return
-    fs.listStatus(oldRoot).foreach { st =>
-      val live = new Path(path, st.getPath.getName)
-      if (fs.exists(live)) fs.delete(st.getPath, true)
-      else fs.rename(st.getPath, live)
-    }
-  }
-
-  /** Replace the table at `path` with `df` via stage → move old aside →
-    * promote staged → drop old: no point in this sequence has zero live
-    * copies on disk. `df` MAY read from `path` itself (it is staged to a
-    * side directory before the live table moves). Full-table form — the
-    * keyed sinks use the incremental [[upsertKeyed]] instead. */
-  def overwriteSwapped(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".staging")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    swapDir(fs, tmp, new Path(path), new Path(path + ".old-full"))
-  }
 
   /** K7 — debug sink. */
   def debug(df: DataFrame, n: Int = 20): Unit = df.show(n, truncate = false)

@@ -74,7 +74,7 @@ class IntegrationSpec extends SparkSpec {
       }
     } finally q.stop()
 
-    val got = spark.read.parquet(outDir)
+    val got = Sinks.readKeyed(spark, outDir)
       .select("stt", "sku", "n_orders", "amount", "category")
       .as[(String, Long, Long, Double, String)].collect().toSet
 

@@ -3,6 +3,7 @@ package graft.apps
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
+import graft.sinks.Sinks
 
 /** Drives DwsSkuOrderApp.run twice over a file source — the second run
   * resumes from the checkpoint and upserts on top of the first run's
@@ -25,7 +26,7 @@ class AppSpec extends SparkSpec {
          |{"order_detail_id": 2, "sku": 20, "amount": 9.0, "ts_sec": ${base + 30}}
          |{"order_detail_id": 9, "sku": 10, "amount": 1.0, "ts_sec": ${base + 2000}}""".stripMargin)
     DwsSkuOrderApp.run(spark, src, dim, out, ckpt)
-    val afterFirst = spark.read.parquet(out)
+    val afterFirst = Sinks.readKeyed(spark, out)
       .select("sku", "n_orders", "amount", "category")
       .as[(Long, Long, Double, String)].collect().toSet
     // window [base, base+600) closed by the base+2000 event: od 1 (dedup'd) + od 2
@@ -35,7 +36,7 @@ class AppSpec extends SparkSpec {
     Files.writeString(Paths.get(s"$src/f2.json"),
       s"""{"order_detail_id": 11, "sku": 20, "amount": 2.0, "ts_sec": ${base + 4000}}""".stripMargin)
     DwsSkuOrderApp.run(spark, src, dim, out, ckpt)
-    val afterSecond = spark.read.parquet(out)
+    val afterSecond = Sinks.readKeyed(spark, out)
       .select("sku", "n_orders", "amount", "category")
       .as[(Long, Long, Double, String)].collect().toSet
     // the base+2000 window (od 9) closed once the base+4000 event advanced

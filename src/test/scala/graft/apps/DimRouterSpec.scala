@@ -2,9 +2,11 @@ package graft.apps
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sinks.Sinks
 
 /** Drives DimRouterApp across two resumed runs: config-driven routing,
   * column whitelisting, update-overwrites and delete-removals (the
@@ -56,7 +58,7 @@ class DimRouterSpec extends SparkSpec {
     assert(second == Set(("1", "paid"))) // id 2 deleted, id 1 updated
     // the delete survives as a tombstone so a late lower-ts event for id 2
     // cannot resurrect it
-    val raw = spark.read.parquet(s"$out/dim_orders")
+    val raw = Sinks.readKeyed(spark, s"$out/dim_orders")
       .select(col("id"), col("__tombstone")).as[(String, Boolean)].collect().toSet
     assert(raw.contains(("2", true)))
   }
@@ -76,5 +78,42 @@ class DimRouterSpec extends SparkSpec {
     val got = DimRouterApp.readDim(spark, s"$out/dim_orders")
       .select(element_at(col("data"), "status")).as[String].collect().toSeq
     assert(got == Seq("paid"))
+  }
+
+  test("dim tables commit through the snapshot manifest: planned readers stay pre-batch, a torn batch heals") {
+    val out = Files.createTempDirectory("dimsnap").toString
+    val table = s"$out/dim_orders"
+    val config = Seq(("orders", "dim_orders", "status"))
+      .toDF("table", "sink_table", "columns")
+    val ids = 1 to 6
+    def status(rows: DataFrame): Map[String, String] =
+      rows.select(col("id"), element_at(col("data"), "status"))
+        .as[(String, String)].collect().toMap
+    DimRouterApp.routeBatch(
+      ids.map(i => env("orders", "insert", 100, "id" -> s"$i",
+        "status" -> "created")).toDF("value"), config, out, 0L)
+    assert(Files.exists(Paths.get(s"$table/_snap")), "no snapshot manifest")
+    val pre = ids.map(i => s"$i" -> "created").toMap
+    val planned = DimRouterApp.readDim(spark, table)
+
+    // batch 1 updates every id and deletes id 6; it crashes after the
+    // first staged file moves in, then the replay heals and re-applies
+    val batch1 = (ids.map(i => env("orders", "update", 200, "id" -> s"$i",
+      "status" -> "paid")) :+ env("orders", "delete", 201, "id" -> "6"))
+      .toDF("value")
+    StagedCommit.crashAfterMoves = 1
+    try intercept[IllegalStateException] {
+      DimRouterApp.routeBatch(batch1, config, out, 1L)
+    } finally StagedCommit.crashAfterMoves = Int.MaxValue
+    assert(status(DimRouterApp.readDim(spark, table)) == pre,
+      "a torn install must be invisible")
+    DimRouterApp.routeBatch(batch1, config, out, 1L)
+
+    assert(status(planned) == pre, "a reader planned pre-batch saw the batch")
+    assert(status(DimRouterApp.readDim(spark, table)) ==
+      (1 to 5).map(i => s"$i" -> "paid").toMap)
+    val stored = Sinks.readKeyed(spark, table).select("id").as[String]
+      .collect().toSeq
+    assert(stored.sorted == ids.map(_.toString).sorted, "duplicate ids")
   }
 }

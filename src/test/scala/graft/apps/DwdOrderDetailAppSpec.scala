@@ -3,6 +3,7 @@ package graft.apps
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
+import graft.sinks.Sinks
 
 /** End-to-end gate for the capstone DWD app: 4 JSON file streams →
   * chained join → keyed upsert, then a RESUMED run over a new file. */
@@ -40,7 +41,7 @@ class DwdOrderDetailAppSpec extends SparkSpec {
 
     DwdOrderDetailApp.run(spark, dDir, iDir, aDir, cDir, out, ckpt)
     def table(): Set[(Long, Long, Option[Long], Option[Long])] =
-      spark.read.parquet(out)
+      Sinks.readKeyed(spark, out)
         .select("order_detail_id", "user_id", "activity_id", "coupon_id")
         .as[(Long, Long, Option[Long], Option[Long])].collect().toSet
         .filter(_._1 < 900)

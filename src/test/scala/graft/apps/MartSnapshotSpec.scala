@@ -37,7 +37,7 @@ class MartSnapshotSpec extends SparkSpec {
 
   private def combineInto(df: DataFrame, path: String, batch: Long): Unit =
     Sinks.upsertCombine(spark, df, Seq("k"), Seq(sum(col("n")).as("n")),
-      batch, path, nBuckets = 8, snapshotted = true)
+      batch, path, nBuckets = 8)
 
   private def rows(df: DataFrame): Map[Long, Long] =
     df.collect().map((r: Row) => r.getLong(0) -> r.getLong(1)).toMap
@@ -83,14 +83,14 @@ class MartSnapshotSpec extends SparkSpec {
     val dir = Files.createTempDirectory("mart-snap-del").toString + "/t"
     combineInto(delta(0 until 20, 1), dir, 0L)
     val planned = Sinks.readCombined(spark, dir)
-    Sinks.deleteWhere(spark, dir, col("k") < 10, snapshotted = true)
+    Sinks.deleteWhere(spark, dir, col("k") < 10)
     assert(rows(planned).keySet == (0L until 20L).toSet,
       "reader planned before the delete keeps the deleted rows (grace)")
     assert(rows(Sinks.readCombined(spark, dir)).keySet == (10L until 20L).toSet)
     // empty the table completely: the manifest lists zero data files but
     // the retired files are still on disk (grace) — the read must serve
     // EMPTY, not resurrect them through a raw-directory fallback
-    Sinks.deleteWhere(spark, dir, lit(true), snapshotted = true)
+    Sinks.deleteWhere(spark, dir, lit(true))
     assert(Sinks.readCombined(spark, dir).isEmpty,
       "an emptied snapshot table must not resurrect retired files")
     // and the machinery accepts new rows after the wipe
@@ -104,7 +104,7 @@ class MartSnapshotSpec extends SparkSpec {
     def upsert(seq: Long, v: String): Unit =
       Sinks.upsertKeyed(spark,
         (0 until 12).map(k => (k.toLong, seq, v)).toDF("k", "seq", "v"),
-        Seq("k"), Seq("seq"), dir, nBuckets = 8, snapshotted = true)
+        Seq("k"), Seq("seq"), dir, nBuckets = 8)
     upsert(1L, "a")
     val planned = Sinks.readKeyed(spark, dir)
     StagedCommit.crashAfterMoves = 1
@@ -148,11 +148,10 @@ class MartSnapshotSpec extends SparkSpec {
 
   test("an existing raw table upgrades in place with one bootstrap commit") {
     val dir = Files.createTempDirectory("mart-snap-up").toString + "/t"
-    // legacy (raw bucket swap) writes
-    Sinks.upsertCombine(spark, delta(0 until 20, 1), Seq("k"),
-      Seq(sum(col("n")).as("n")), 0L, dir, nBuckets = 8)
+    // legacy (raw bucket swap) table, as an older version left it
+    LegacyTables.writeRawCombined(delta(0 until 20, 1), dir, nBuckets = 8)
     assert(Snapshots.currentFiles(fs, new Path(dir)).isEmpty, "still raw")
-    // first snapshotted write: bootstrap manifest + normal merge
+    // first write: bootstrap manifest + normal merge
     combineInto(delta(0 until 20, 10), dir, 1L)
     assert(Snapshots.currentFiles(fs, new Path(dir)).nonEmpty)
     assert(rows(Sinks.readCombined(spark, dir)) ==
@@ -163,5 +162,23 @@ class MartSnapshotSpec extends SparkSpec {
     assert(rows(Sinks.readCombined(spark, dir)) ==
       (0 until 20).map(k => k.toLong -> 111L).toMap)
     assert(Snapshots.currentFiles(fs, new Path(dir)).nonEmpty)
+  }
+
+  test("a raw table reads by bucket, and adoption heals a crashed bucket swap") {
+    val dir = Files.createTempDirectory("mart-snap-old").toString + "/t"
+    LegacyTables.writeRawCombined(delta(0 until 20, 1), dir, nBuckets = 8)
+    // the per-batch state lookup reads a not-yet-adopted table's dirs
+    val probe = Seq(3L).toDF("k")
+    assert(rows(Sinks.readKeyedFor(spark, dir, probe, Seq("k")).get
+      .filter(col("k") === 3L).select("k", "n")) == Map(3L -> 1L))
+    // an older version crashed between moving k=3's bucket aside and
+    // promoting its replacement: the aside copy is the only one
+    val b = graft.functions.StableHash.stable60Local("3") % 8
+    val aside = new Path(dir + ".old", s"__bucket=$b")
+    assert(fs.rename(new Path(dir, s"__bucket=$b"), aside))
+    combineInto(delta(0 until 20, 10), dir, 1L)
+    assert(rows(Sinks.readCombined(spark, dir)) ==
+      (0 until 20).map(k => k.toLong -> 11L).toMap)
+    assert(!fs.exists(new Path(dir + ".old")))
   }
 }

@@ -41,7 +41,7 @@ class RebucketSpec extends SparkSpec {
                           batch: Long, nBuckets: Int = 4): Unit =
     Sinks.upsertCombine(spark, keys.map(k => (k.toLong, n)).toDF("k", "n"),
       Seq("k"), Seq(sum(col("n")).as("n")), batch, path,
-      nBuckets = nBuckets, snapshotted = true)
+      nBuckets = nBuckets)
 
   private def rows(df: DataFrame): Map[Long, Long] =
     df.collect().map((r: Row) => r.getLong(0) -> r.getLong(1)).toMap
@@ -144,13 +144,13 @@ class RebucketSpec extends SparkSpec {
     // merge a replayed bucket's stamp over an unreplayed key's delta —
     // so the primitive demands the table-atomic snapshot mode first
     val dir = Files.createTempDirectory("rebkt-raw").toString + "/t"
-    Sinks.upsertCombine(spark, (0 until 16).map(k => (k.toLong, 1L)).toDF("k", "n"),
-      Seq("k"), Seq(sum(col("n")).as("n")), 0L, dir, nBuckets = 4)
+    LegacyTables.writeRawCombined(
+      (0 until 16).map(k => (k.toLong, 1L)).toDF("k", "n"), dir, nBuckets = 4)
     val e = intercept[IllegalArgumentException] {
       Sinks.rebucket(spark, dir, Seq("k"), newN = 8)
     }
     assert(e.getMessage.contains("snapshot-managed"), e.getMessage)
-    // the documented path works: one snapshotted write upgrades, then
+    // the documented path works: one write upgrades, then
     // the rebucket applies
     combineInto(dir, 0 until 16, 10, 1)
     Sinks.rebucket(spark, dir, Seq("k"), newN = 8)
@@ -164,7 +164,7 @@ class RebucketSpec extends SparkSpec {
     def upsert(seq: Long, v: String): Unit =
       Sinks.upsertKeyed(spark,
         (0 until 40).map(k => (k.toLong, seq, v)).toDF("k", "seq", "v"),
-        Seq("k"), Seq("seq"), dir, nBuckets = 4, snapshotted = true)
+        Seq("k"), Seq("seq"), dir, nBuckets = 4)
     upsert(1L, "a")
     Sinks.rebucket(spark, dir, Seq("k"), newN = 8)
     upsert(2L, "b")
@@ -269,8 +269,8 @@ class RebucketSpec extends SparkSpec {
     assert(tenth == 10 || tenth == 11, s"got $tenth for a tenth-sized target")
     // raw tables have no pinned manifest to measure — loud, not a guess
     val raw = Files.createTempDirectory("recbkt-raw").toString + "/t"
-    Sinks.upsertCombine(spark, (0 until 8).map(k => (k.toLong, 1L)).toDF("k", "n"),
-      Seq("k"), Seq(sum(col("n")).as("n")), 0L, raw, nBuckets = 4)
+    LegacyTables.writeRawCombined(
+      (0 until 8).map(k => (k.toLong, 1L)).toDF("k", "n"), raw, nBuckets = 4)
     intercept[IllegalArgumentException] {
       Sinks.recommendedBuckets(spark, raw)
     }
@@ -293,7 +293,7 @@ class RebucketSpec extends SparkSpec {
     val users = spark.range(2000000L)
       .select(col("id").as("k"), lit(1L).as("n"))
     Sinks.upsertCombine(spark, users, Seq("k"), Seq(sum(col("n")).as("n")),
-      0L, dir, nBuckets = 64, snapshotted = true)
+      0L, dir, nBuckets = 64)
     // bytes alone is still blind to the scenario — that was the bug
     assert(Sinks.recommendedBuckets(spark, dir,
       targetRowsPerBucket = Long.MaxValue) == 1,
@@ -314,7 +314,7 @@ class RebucketSpec extends SparkSpec {
       Seq((1L, "2024-01-01", 5L)).toDF("user_id", "cur_date", "pv")
         .select(col("cur_date"), col("user_id"), col("pv")),
       Seq("cur_date", "user_id"), Seq(sum(col("pv")).as("pv")),
-      batchId = 7L, path = s"$dir/uv_days", snapshotted = true)
+      batchId = 7L, path = s"$dir/uv_days")
     val ev = Seq((1L, 1000000L, 1L, "t0", 1.0))
       .toDF("user_id", "us", "event_id", "event_type", "value")
       .select(col("user_id"), timestamp_micros(col("us")).as("ts"),

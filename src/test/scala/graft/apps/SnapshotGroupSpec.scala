@@ -45,8 +45,7 @@ class SnapshotGroupSpec extends SparkSpec {
     val (a, b) = (s"$dir/a", s"$dir/b")
     def put(path: String, n: Long, batch: Long): Unit =
       Sinks.upsertCombine(spark, (0 until 8).map(k => (k.toLong, n)).toDF("k", "n"),
-        Seq("k"), Seq(sum(col("n")).as("n")), batch, path, nBuckets = 4,
-        snapshotted = true)
+        Seq("k"), Seq(sum(col("n")).as("n")), batch, path, nBuckets = 4)
     val mem = Seq("a" -> new Path(a), "b" -> new Path(b),
       "ghost" -> new Path(s"$dir/never_created"))
     put(a, 1, 0); put(b, 10, 0)
@@ -489,8 +488,7 @@ class SnapshotGroupSpec extends SparkSpec {
     val (a, b) = (s"$dir/a", s"$dir/b")
     def put(path: String, n: Long, batch: Long): Unit =
       Sinks.upsertCombine(spark, (0 until 8).map(k => (k.toLong, n)).toDF("k", "n"),
-        Seq("k"), Seq(sum(col("n")).as("n")), batch, path, nBuckets = 4,
-        snapshotted = true)
+        Seq("k"), Seq(sum(col("n")).as("n")), batch, path, nBuckets = 4)
     put(a, 1, 0); put(b, 10, 0)
     // grp1 pins a AND b; grp2 pins only a
     Snapshots.commitGroup(fs, new Path(s"$dir/grp1"),
@@ -541,8 +539,7 @@ class SnapshotGroupSpec extends SparkSpec {
     val dir = Files.createTempDirectory("snapvac-legacy").toString
     val a = s"$dir/a"
     Sinks.upsertCombine(spark, (0 until 8).map(k => (k.toLong, 1L)).toDF("k", "n"),
-      Seq("k"), Seq(sum(col("n")).as("n")), 0L, a, nBuckets = 4,
-      snapshotted = true)
+      Seq("k"), Seq(sum(col("n")).as("n")), 0L, a, nBuckets = 4)
     val grp = new Path(s"$dir/grp")
     Snapshots.commitGroup(fs, grp, Seq("a" -> new Path(a)))
     val pin = fs.listStatus(new Path(s"$a/_snap"))
@@ -579,8 +576,7 @@ class SnapshotGroupSpec extends SparkSpec {
     val dir = Files.createTempDirectory("snapvac-race").toString
     val a = s"$dir/a"
     Sinks.upsertCombine(spark, (0 until 8).map(k => (k.toLong, 1L)).toDF("k", "n"),
-      Seq("k"), Seq(sum(col("n")).as("n")), 0L, a, nBuckets = 4,
-      snapshotted = true)
+      Seq("k"), Seq(sum(col("n")).as("n")), 0L, a, nBuckets = 4)
     val grp = new Path(s"$dir/grp")
     Snapshots.commitGroup(fs, grp, Seq("a" -> new Path(a)))
     // simulate the window: report sees the group dead…

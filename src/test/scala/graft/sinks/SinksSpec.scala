@@ -31,11 +31,11 @@ class SinksSpec extends SparkSpec {
     Sinks.upsertKeyed(spark, Seq(KV(1, 2, "a2"), KV(3, 1, "c")).toDF(),
       Seq("k"), Seq("seq"), dir)
     val expect = Set(KV(1, 2, "a2"), KV(2, 1, "b"), KV(3, 1, "c"))
-    assert(spark.read.parquet(dir).as[KV].collect().toSet == expect)
+    assert(Sinks.readKeyed(spark, dir).as[KV].collect().toSet == expect)
     // exactly-once property: re-applying the same update changes nothing
     Sinks.upsertKeyed(spark, Seq(KV(1, 2, "a2"), KV(3, 1, "c")).toDF(),
       Seq("k"), Seq("seq"), dir)
-    assert(spark.read.parquet(dir).as[KV].collect().toSet == expect)
+    assert(Sinks.readKeyed(spark, dir).as[KV].collect().toSet == expect)
   }
 
   test("upsertKeyed is incremental: untouched buckets are not rewritten") {
@@ -60,7 +60,7 @@ class SinksSpec extends SparkSpec {
     // k2's bucket: same file names, sizes, and mtimes — never rewritten
     assert(files(bucket(k2)) == untouchedBefore)
     // k1's bucket DID change
-    assert(spark.read.parquet(dir).as[KV].collect().toSet ==
+    assert(Sinks.readKeyed(spark, dir).as[KV].collect().toSet ==
       Set(KV(k1, 2, "a2"), KV(k2, 1, "b")))
   }
 
@@ -72,7 +72,7 @@ class SinksSpec extends SparkSpec {
     // other buckets (which would duplicate them across the table)
     Sinks.upsertKeyed(spark, Seq(KV(1, 2, "a2")).toDF(), Seq("k"), Seq("seq"),
       dir, nBuckets = 64)
-    assert(spark.read.parquet(dir).as[KV].collect().toSet == Set(KV(1, 2, "a2")))
+    assert(Sinks.readKeyed(spark, dir).as[KV].collect().toSet == Set(KV(1, 2, "a2")))
   }
 
   test("purgeTombstones: only buckets with old tombstones rewritten; young tombstones survive") {
@@ -96,13 +96,18 @@ class SinksSpec extends SparkSpec {
     }
     val k2Before = files(bucket(k2))
     Sinks.purgeTombstones(spark, dir, "ts", olderThan = 100L)
-    // k1's bucket lost its only row → dir dropped; k2's bucket untouched
+    // k1's bucket lost its only row; k2's bucket untouched
     // (its tombstone is younger than the bound)
-    val got = spark.read.parquet(dir)
+    val got = Sinks.readKeyed(spark, dir)
       .select("k", "ts", "__tombstone")
       .as[(Long, Long, Boolean)].collect().toSet
     assert(got == Set((k2, 500L, true), (k3, 500L, false)))
     assert(files(bucket(k2)) == k2Before) // byte-identical, never rewritten
+    // the purged file is retired, not deleted, until two more commits
+    // end planned readers' grace window; then k1's bucket is empty on disk
+    for (ts <- Seq(600L, 700L))
+      Sinks.upsertKeyed(spark, Seq((k3, ts, false)).toDF("k", "ts", "__tombstone"),
+        Seq("k"), Seq("ts"), dir)
     assert(files(bucket(k1)).isEmpty)
   }
 
@@ -128,7 +133,7 @@ class SinksSpec extends SparkSpec {
       mem.addData(Seq(KV(1, 1, "a"), KV(2, 1, "b"))); q.processAllAvailable()
       mem.addData(Seq(KV(1, 2, "a2"))); q.processAllAvailable()
     } finally q.stop()
-    assert(spark.read.parquet(dir).as[KV].collect().toSet ==
+    assert(Sinks.readKeyed(spark, dir).as[KV].collect().toSet ==
       Set(KV(1, 2, "a2"), KV(2, 1, "b")))
   }
 
