@@ -424,9 +424,8 @@ object ScaleProbe {
       spark.sparkContext.hadoopConfiguration)
     val dir = s"$work/mart_auto"
     fs.delete(new Path(dir), true)
-    // sweep (→ vacuum report + auto-widen consult) EVERY batch;
-    // autoWiden is the Retention default — the soak runs the policy
-    // exactly as shipped
+    // sweep (→ vacuum report + auto-widen consult) EVERY batch — the
+    // soak runs the policy exactly as shipped
     val ret = EventMartStream.Retention(decaySweepEveryN = 1,
       ttlSweepEveryN = Int.MaxValue)
     val retOff = EventMartStream.Retention(
@@ -468,8 +467,8 @@ object ScaleProbe {
       // convention: maintenance cost is timed above, per-batch here)
       out(s"batch_$label") = (1 to 3).map(_ => run(100, 0L, retOff)).min
       tables.foreach { t =>
-        out(s"buckets_${label}_$t") = Snapshots.currentBucketCount(
-          fs, new Path(s"$dir/$t")).getOrElse(64).toDouble
+        out(s"buckets_${label}_$t") = Snapshots.settings(
+          fs, new Path(s"$dir/$t")).nbuckets.getOrElse(64).toDouble
       }
       println(f"[scale-probe] mart-auto $label%-6s batch ${out(s"batch_$label")}%7.2f s" +
         f"  settle ${out(s"settle_sum_$label")}%8.2f s  buckets " +

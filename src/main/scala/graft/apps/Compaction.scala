@@ -72,7 +72,7 @@ object Compaction {
     * small files + its graduated files — bounded by DATA size
     * (bytes/targetBytes), never by append count. PER-TABLE OVERRIDE:
     * a snapshot-managed table whose manifest carries a `targetbytes`
-    * line ([[Snapshots.currentTargetBytes]], set via
+    * line ([[Snapshots.Settings]], set via
     * `Sinks.setCompactionTarget` or a `rebucket` flip) graduates at
     * ITS value — the manifest-ceiling knob that lets a 100 TB table
     * graduate at 1 GiB (8× fewer manifest lines) while small state
@@ -151,8 +151,8 @@ object Compaction {
     val frozen: Seq[(Group, Seq[(Path, Seq[Path])])] = groups.map { g =>
       // one newest-manifest resolution yields BOTH the data list and
       // the per-table graduation override
-      val snapInfo: Option[(Seq[String], Option[Long])] =
-        g.snapshotRoot.flatMap(Snapshots.currentFilesAndTarget(fs, _))
+      val snapInfo: Option[(Seq[String], Snapshots.Settings)] =
+        g.snapshotRoot.flatMap(Snapshots.currentFilesAndSettings(fs, _))
       val inData: Path => Boolean = (g.snapshotRoot, snapInfo) match {
         case (Some(root), Some((data, _))) =>
           val abs = data.map(p => new Path(root, p).toUri.getPath).toSet
@@ -161,7 +161,7 @@ object Compaction {
       }
       // per-table graduation size: the snapshot manifest's targetbytes
       // line overrides the call-site default (see DefaultTargetBytes)
-      val effTarget = snapInfo.flatMap(_._2).getOrElse(targetBytes)
+      val effTarget = snapInfo.flatMap(_._2.targetBytes).getOrElse(targetBytes)
       g -> g.dirs.flatMap { dir =>
         val files = visibleFiles(fs, dir)
           .filter(_.getLen < effTarget).map(_.getPath)

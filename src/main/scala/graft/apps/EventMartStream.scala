@@ -126,8 +126,7 @@ object EventMartStream {
   final case class Retention(decaySweepEveryN: Int = 64,
                              sessTtlUs: Option[Long] = None,
                              transTtlUs: Option[Long] = None,
-                             ttlSweepEveryN: Int = 8,
-                             autoWiden: Boolean = true)
+                             ttlSweepEveryN: Int = 8)
   object Retention { val default: Retention = Retention() }
 
   /** The mart's state tables with their bucketing keys — the
@@ -599,15 +598,13 @@ object EventMartStream {
       // replay-idempotent on its own (a replayed widened table
       // no-ops on count equality), so it needs no stage stamp. Never
       // narrows — see [[Sinks.autoWiden]].
-      if (retention.autoWiden) {
-        StateTables.iterator
-          .filter { case (t, _) => fs.exists(new Path(s"$martDir/$t")) }
-          .map { case (t, keys) =>
-            Sinks.autoWiden(spark, s"$martDir/$t", keys)
-              .map(n => s"$t -> $n buckets") }
-          .collectFirst { case Some(w) => w }
-          .foreach(w => System.err.println(s"[graft.mart] auto-widened $w"))
-      }
+      StateTables.iterator
+        .filter { case (t, _) => fs.exists(new Path(s"$martDir/$t")) }
+        .map { case (t, keys) =>
+          Sinks.autoWiden(spark, s"$martDir/$t", keys)
+            .map(n => s"$t -> $n buckets") }
+        .collectFirst { case Some(w) => w }
+        .foreach(w => System.err.println(s"[graft.mart] auto-widened $w"))
       val wkPath = s"$martDir/decay_weeks"
       val wk = Sinks.readCombined(spark, wkPath)
       val refW = wk.filter(col("__w") =!= SentinelWeek)

@@ -177,7 +177,7 @@ object HybridSearchApp {
       // (r13 verdict task #4) — at most one widening per cycle, under
       // this lease. Runs AFTER the advance: the hybrid group pins the
       // pre-rebucket generation, and pinned queries prune with ITS
-      // geometry (Snapshots.bucketCountAt) until the next cycle's
+      // geometry (Snapshots.settings) until the next cycle's
       // advance publishes the re-routed one — the exact sequence
       // TextIndexRebucketSpec pins. The vector arm's knob is the
       // autoRetrain consult below (gated on fullVecCorpus): its

@@ -14,7 +14,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    current data files (relative paths) plus the files RETIRED at
   *    this version (replaced by a compaction merge, still on disk)
   *    and the files EXPIRING (retired one version earlier, still on
-  *    disk for one last commit);
+  *    disk for one last commit), led by the table's [[Settings]] —
+  *    their only record;
   *  - the current version is simply the highest `v<N>` present — a
   *    commit is ONE atomic rename (create-new-name), so there is no
   *    pointer file to non-atomically overwrite;
@@ -54,18 +55,39 @@ private[graft] object Snapshots {
   private def snapDir(root: Path) = new Path(root, "_snap")
   private def pendingPath(root: Path) = new Path(snapDir(root), "pending")
 
-  private final case class Manifest(version: Int, data: Seq[String],
+  /** A table's settings: the bucket count (`nbuckets`), the
+    * trained-state generation (`trainedgen`) and the per-table
+    * compaction graduation size (`targetbytes`); None = not set. They
+    * are the LEADING lines of every manifest (and of the pending
+    * journal), and every commit carries forward each one it does not
+    * set ([[orElse]]), so the manifest is the table's only record of
+    * them and a setting flips atomically with the layout it
+    * describes (a rebucket's count, a retrain's generation). */
+  final case class Settings(nbuckets: Option[Int] = None,
+                            trainedGen: Option[Int] = None,
+                            targetBytes: Option[Long] = None) {
+    /** Each setting of this one, else `prev`'s. */
+    def orElse(prev: Settings): Settings =
+      Settings(nbuckets.orElse(prev.nbuckets),
+        trainedGen.orElse(prev.trainedGen),
+        targetBytes.orElse(prev.targetBytes))
+
+    private[Snapshots] def lines: Seq[String] =
+      nbuckets.map(b => s"nbuckets $b").toSeq ++
+        trainedGen.map(g => s"trainedgen $g") ++
+        targetBytes.map(t => s"targetbytes $t")
+  }
+
+  private final case class Manifest(version: Int, settings: Settings,
+                                    data: Seq[String],
                                     retired: Seq[String],
-                                    expiring: Seq[String],
-                                    nbuckets: Option[Int],
-                                    trainedgen: Option[Int],
-                                    targetbytes: Option[Long])
+                                    expiring: Seq[String])
 
   /** Highest committed version number under a `_snap` dir, if any —
     * THE manifest-naming convention (`v%08d`, digit-checked), in one
-    * place: [[currentManifest]], [[currentBucketCount]] and
-    * [[trainedGenAt]] all resolve the head through it, so the listing
-    * convention cannot drift between readers (round-14 review). */
+    * place: [[currentManifest]] and [[settings]] both resolve the head
+    * through it, so the listing convention cannot drift between
+    * readers (round-14 review). */
   private def newestVersion(fs: FileSystem, dir: Path): Option[Int] = {
     if (!fs.exists(dir)) return None
     val vs = fs.listStatus(dir).toSeq.map(_.getPath.getName)
@@ -82,128 +104,77 @@ private[graft] object Snapshots {
   def currentVersion(fs: FileSystem, root: Path): Option[Int] =
     newestVersion(fs, snapDir(root))
 
-  /** Highest committed version under `root`, if any. */
+  /** Highest committed version under `root`, if any. A manifest
+    * written before the expiring generation simply has no `expiring`
+    * lines — its retirees get one extra commit of grace, never less. */
   private def currentManifest(fs: FileSystem, root: Path): Option[Manifest] = {
     val dir = snapDir(root)
     newestVersion(fs, dir).map { n =>
-      val lines = readLines(fs, new Path(dir, f"v$n%08d"))
-      // a pre-expiring-generation manifest simply has no `expiring`
-      // lines — its retirees get one extra commit of grace, never less;
-      // a pre-rebucket manifest has no `nbuckets` line — the sidecar
-      // `.nbuckets` file stays authoritative for it
-      parseManifest(n, lines)
+      parseManifest(n, readLines(fs, new Path(dir, f"v$n%08d")))
     }
   }
 
   private def parseManifest(n: Int, lines: Seq[String]): Manifest =
-    Manifest(n,
+    Manifest(n, parseSettings(lines.iterator),
       lines.collect { case s if s.startsWith("data ") => s.drop(5) },
       lines.collect { case s if s.startsWith("retired ") => s.drop(8) },
-      lines.collect { case s if s.startsWith("expiring ") => s.drop(9) },
-      lines.collectFirst { case s if s.startsWith("nbuckets ") =>
-        s.drop(9).trim.toInt },
-      lines.collectFirst { case s if s.startsWith("trainedgen ") =>
-        s.drop(11).trim.toInt },
-      lines.collectFirst { case s if s.startsWith("targetbytes ") =>
-        s.drop(12).trim.toLong })
+      lines.collect { case s if s.startsWith("expiring ") => s.drop(9) })
 
-  /** The bucket count the newest manifest carries, if any — committed
-    * ATOMICALLY with the data layout it describes (the rebucket
-    * primitive's one-commit count+layout flip). Tables whose manifests
-    * predate the line fall back to their sidecar `.nbuckets` file.
-    * Reads ONLY the first manifest line ([[commit]] writes `nbuckets`
-    * first when present): this sits on every keyed-sink mutation entry
-    * and every `readKeyedFor`, and a full-manifest parse here would
-    * put a data-list-sized read on the hot per-batch path. */
-  def currentBucketCount(fs: FileSystem, root: Path): Option[Int] = {
-    val dir = snapDir(root)
-    newestVersion(fs, dir).flatMap { n =>
-      val in = fs.open(new Path(dir, f"v$n%08d"))
-      try {
-        val br = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-        Option(br.readLine()).filter(_.startsWith("nbuckets "))
-          .map(_.drop(9).trim.toInt)
-      } finally in.close()
+  private val SettingKeys = Set("nbuckets", "trainedgen", "targetbytes")
+
+  /** THE parser of setting lines (manifests and the pending journal):
+    * reads the leading lines up to the first one that is not a
+    * setting, so it never reads into a file list. */
+  private def parseSettings(lines: Iterator[String]): Settings =
+    lines.map(_.split(" ", 2))
+      .takeWhile(kv => kv.length == 2 && SettingKeys(kv(0)))
+      .foldLeft(Settings()) { (s, kv) =>
+        val v = kv(1).trim
+        kv(0) match {
+          case "nbuckets" => s.copy(nbuckets = Some(v.toInt))
+          case "trainedgen" => s.copy(trainedGen = Some(v.toInt))
+          case _ => s.copy(targetBytes = Some(v.toLong))
+        }
+      }
+
+  /** The settings of `root`'s newest manifest, or of the manifest
+    * `version` names — the geometry resolver for PINNED reads across
+    * an online rebucket or retrain: a group-pinned query routes,
+    * prunes and decodes with the settings of the generation it reads,
+    * never the head's. Empty when the table has no manifest; a pinned
+    * version that is gone fails loudly, as in [[readTableAt]]. Reads
+    * only the leading setting lines ([[parseSettings]]): this sits on
+    * every keyed-sink mutation and every `readKeyedFor`, where a full
+    * parse would put a data-list-sized read on the per-batch path. */
+  def settings(fs: FileSystem, root: Path,
+               version: Option[Int] = None): Settings = {
+    val p = version match {
+      case Some(v) => pinnedManifest(fs, root, v)
+      case None => currentVersion(fs, root)
+        .map(v => new Path(snapDir(root), f"v$v%08d"))
+        .getOrElse(return Settings())
     }
-  }
-
-  /** The bucket count a SPECIFIC manifest version carries, if any —
-    * the geometry resolver for PINNED reads across an online rebucket:
-    * a group-pinned query must route/prune with the count of the
-    * layout it reads, not the head's (a 64-routed prune over a
-    * 16-bucket generation silently drops terms). Absent line =
-    * pre-rebucket manifest = the caller's build-time fallback applies.
-    * Bounded first-line read, same as [[currentBucketCount]]. */
-  def bucketCountAt(fs: FileSystem, root: Path, version: Int)
-      : Option[Int] = {
-    val p = new Path(snapDir(root), f"v$version%08d")
-    if (!fs.exists(p)) return None
     val in = fs.open(p)
     try {
       val br = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-      Option(br.readLine()).filter(_.startsWith("nbuckets "))
-        .map(_.drop(9).trim.toInt)
+      parseSettings(Iterator.continually(br.readLine()).takeWhile(_ != null))
     } finally in.close()
   }
-
-  /** The TRAINED-STATE GENERATION a manifest carries, if any — the
-    * geometry resolver for the vector index's staged online re-train
-    * ([[VectorIndexApp.retrain]]), the exact pattern of
-    * [[bucketCountAt]]: a codes layout and the codebook generation
-    * that encoded it flip in ONE manifest rename (the `trainedgen`
-    * line), and any reader — head or pinned — resolves the books of
-    * the generation THAT layout was encoded with, never a mix. Absent
-    * line = pre-retrain manifest = generation 0 (the build-time books
-    * at the index root). Bounded-prefix read: config lines lead the
-    * manifest in fixed order (nbuckets, trainedgen, targetbytes), so
-    * at most three line reads, never the data list. `version = None`
-    * resolves the newest manifest. */
-  def trainedGenAt(fs: FileSystem, root: Path,
-                   version: Option[Int] = None): Option[Int] = {
-    val dir = snapDir(root)
-    val p = version.orElse(newestVersion(fs, dir)) match {
-      case Some(v) => new Path(dir, f"v$v%08d")
-      case None => return None
-    }
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    try {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-      Iterator.continually(Option(br.readLine())).take(3)
-        .takeWhile(_.exists(l => l.startsWith("nbuckets ") ||
-          l.startsWith("trainedgen ") || l.startsWith("targetbytes ")))
-        .flatten
-        .collectFirst { case l if l.startsWith("trainedgen ") =>
-          l.drop(11).trim.toInt }
-    } finally in.close()
-  }
-
-  /** The per-table compaction graduation size the newest manifest
-    * carries, if any — committed atomically with the layout like
-    * `nbuckets`. Delegates to the full manifest parse: hot-path
-    * callers go through [[currentFilesAndTarget]] (one resolution for
-    * data list + target), so a second bounded-prefix reader here only
-    * duplicated the version-resolution logic and silently returned
-    * None if the `targetbytes` line ever drifted past its assumed
-    * position. */
-  def currentTargetBytes(fs: FileSystem, root: Path): Option[Long] =
-    currentManifest(fs, root).flatMap(_.targetbytes)
 
   /** The current data-file list (paths relative to `root`); None when
     * the table is not snapshot-managed (no committed manifest). */
   def currentFiles(fs: FileSystem, root: Path): Option[Seq[String]] =
     currentManifest(fs, root).map(_.data)
 
-  /** Data list + per-table graduation target from ONE newest-manifest
-    * resolution — [[Compaction.compact]] needs both per snapshot root,
-    * and resolving them separately would list and open the same
-    * manifest twice per group per pass. */
-  def currentFilesAndTarget(fs: FileSystem, root: Path)
-      : Option[(Seq[String], Option[Long])] =
-    currentManifest(fs, root).map(m => (m.data, m.targetbytes))
+  /** Data list + settings from ONE newest-manifest resolution — for
+    * readers that need both to agree ([[Compaction.compact]]'s
+    * graduation target, `Sinks.readKeyedFor`'s bucket prune: two
+    * resolutions could straddle a rebucket commit and prune the new
+    * layout with the old count). */
+  def currentFilesAndSettings(fs: FileSystem, root: Path)
+      : Option[(Seq[String], Settings)] =
+    currentManifest(fs, root).map(m => (m.data, m.settings))
 
   /** Commit ONLY if visible files exist that the current manifest does
     * not list — the replay / empty-batch heal path: a torn append that
@@ -270,13 +241,20 @@ private[graft] object Snapshots {
                   pruneDirs: Option[(String, Set[Long])] = None)
       : org.apache.spark.sql.DataFrame = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val p = pinnedManifest(fs, root, version)
+    readManifest(spark, fs, root,
+      Some(parseManifest(version, readLines(fs, p))), pruneDirs)
+  }
+
+  /** The manifest file of pinned `version`, which must still exist. */
+  private def pinnedManifest(fs: FileSystem, root: Path,
+                             version: Int): Path = {
     val p = new Path(snapDir(root), f"v$version%08d")
     require(fs.exists(p),
       s"pinned manifest v$version of $root is gone — the table committed " +
         "past the manifest keep-window since its group last advanced " +
         "(group-advance protocol violated?)")
-    readManifest(spark, fs, root,
-      Some(parseManifest(version, readLines(fs, p))), pruneDirs)
+    p
   }
 
   private def readManifest(spark: org.apache.spark.sql.SparkSession,
@@ -370,23 +348,15 @@ private[graft] object Snapshots {
     * commit (the meta watermark makes the replay a no-op, so adoption
     * here is their only way in); compaction's merged files are never
     * unlisted at commit time because [[heal]] resolves the pending
-    * journal first. */
+    * journal first. `settings` sets what it names and carries the
+    * rest forward from the current version. */
   def commit(fs: FileSystem, root: Path,
              replaced: Seq[String] = Nil,
-             nbuckets: Option[Int] = None,
-             targetBytes: Option[Long] = None,
-             trainedGen: Option[Int] = None,
+             settings: Settings = Settings(),
              enforceCeiling: Boolean = true): Int = {
     val cur = currentManifest(fs, root)
     val n = cur.map(_.version).getOrElse(0) + 1
-    // the bucket count rides the manifest so a rebucket flips count and
-    // layout in ONE rename; every other commit carries it forward —
-    // the per-table compaction graduation size and the trained-state
-    // generation ([[trainedGenAt]]) ride the same way (r11 verdict
-    // task #5; r13 verdict task #3)
-    val nb = nbuckets.orElse(cur.flatMap(_.nbuckets))
-    val tg = trainedGen.orElse(cur.flatMap(_.trainedgen))
-    val tb = targetBytes.orElse(cur.flatMap(_.targetbytes))
+    val kept = settings.orElse(cur.map(_.settings).getOrElse(Settings()))
     val expiring = cur.map(_.retired).getOrElse(Nil) // one commit old
     val dying = cur.map(_.expiring).getOrElse(Nil)   // two commits old
     val gone = (replaced ++ expiring ++ dying).toSet
@@ -457,16 +427,10 @@ private[graft] object Snapshots {
     val dir = snapDir(root)
     fs.mkdirs(dir)
     val tmp = new Path(dir, s".tmp-v$n")
-    // layout/config lines lead the manifest in a FIXED order (nbuckets,
-    // trainedgen, targetbytes) so the bounded-prefix readers
-    // ([[currentBucketCount]]/[[bucketCountAt]] resolve from the first
-    // line; [[trainedGenAt]] scans at most the three config lines;
-    // [[currentTargetBytes]] deliberately full-parses via
-    // [[currentManifest]]) never touch the data list
+    // the setting lines lead the manifest, so [[settings]] reads them
+    // without touching the data list
     write(fs, tmp,
-      (nb.toSeq.map(b => s"nbuckets $b") ++
-        tg.toSeq.map(g => s"trainedgen $g") ++
-        tb.toSeq.map(t => s"targetbytes $t") ++
+      (kept.lines ++
         data.sorted.map(p => s"data $p") ++
         replaced.sorted.map(p => s"retired $p") ++
         (expiring ++ stubborn).sorted.map(p => s"expiring $p"))
@@ -859,13 +823,12 @@ private[graft] object Snapshots {
 
   /** Journal a compaction's intent BEFORE its merged files install:
     * the `replaced` originals and the `merged` files (both
-    * root-relative). Consumed by [[commitPending]] on success or
-    * resolved by [[heal]] after a crash. */
+    * root-relative), and the `settings` its commit sets. Consumed by
+    * [[commitPending]] on success or resolved by [[heal]] after a
+    * crash. */
   def writePending(fs: FileSystem, root: Path, replaced: Seq[String],
                    merged: Seq[String],
-                   nbuckets: Option[Int] = None,
-                   targetBytes: Option[Long] = None,
-                   trainedGen: Option[Int] = None): Unit = {
+                   settings: Settings = Settings()): Unit = {
     // the journaled flow's ceiling guard — HERE, before any file
     // installs: once [[StagedCommit.publishOps]] runs, the journal
     // must be completable unconditionally ([[commitPending]] commits
@@ -887,18 +850,15 @@ private[graft] object Snapshots {
         "cost.")
     fs.mkdirs(snapDir(root))
     write(fs, pendingPath(root),
-      (nbuckets.toSeq.map(b => s"nbuckets $b") ++
-        trainedGen.toSeq.map(g => s"trainedgen $g") ++
-        targetBytes.toSeq.map(t => s"targetbytes $t") ++
+      (settings.lines ++
         replaced.map(p => s"replaced $p") ++
         merged.map(p => s"merged $p")).mkString("\n"))
   }
 
   /** Complete a journaled compaction: snapshot-commit with the
-    * journal's replaced set (and its bucket-count flip, when the
-    * journaled mutation was a rebucket — so a crash-healed rebucket
-    * still commits count and layout together), then drop the
-    * journal. */
+    * journal's replaced set and settings (a rebucket's count, a
+    * retrain's generation — so a crash-healed mutation still commits
+    * its settings and layout together), then drop the journal. */
   def commitPending(fs: FileSystem, root: Path): Unit = {
     val p = pendingPath(root)
     if (!fs.exists(p)) return
@@ -909,12 +869,7 @@ private[graft] object Snapshots {
     // would wedge the heal loop forever
     commit(fs, root,
       replaced = lines.collect { case s if s.startsWith("replaced ") => s.drop(9) },
-      nbuckets = lines.collectFirst { case s if s.startsWith("nbuckets ") =>
-        s.drop(9).trim.toInt },
-      targetBytes = lines.collectFirst { case s if s.startsWith("targetbytes ") =>
-        s.drop(12).trim.toLong },
-      trainedGen = lines.collectFirst { case s if s.startsWith("trainedgen ") =>
-        s.drop(11).trim.toInt },
+      settings = parseSettings(lines.iterator),
       enforceCeiling = false)
     fs.delete(p, false)
   }

@@ -34,13 +34,11 @@ import graft.queries.TextQueries
   *     append and retract stay exact by construction — there is no
   *     denormalized count to drift. (The stats agg is linear in the
   *     DOCUMENT count — metadata-scale next to the corpus.)
-  *   - `meta/` — max doc_id indexed (watermark, replay guard);
-  *     `conf/` — the BUILD-time nBuckets. The router count is
-  *     manifest-resolved and mutable via the online [[rebucket]]
-  *     (the `nbuckets` line rides the postings manifest, flipping
-  *     count and layout in one commit); `conf/` remains the fallback
-  *     for generations whose manifests predate the line — exactly the
-  *     pre-rebucket layouts its value describes.
+  *   - `meta/` — max doc_id indexed (watermark, replay guard).
+  *     The router's bucket count is a setting of the postings
+  *     manifest (its `nbuckets` line, recorded from the build's
+  *     commit on) and mutable via the online [[rebucket]], which
+  *     flips count and layout in one commit.
   *
   * Appends stage under `_staging` and publish through [[StagedCommit]]
   * with the meta watermark last; `postings` and `doclens` are
@@ -130,19 +128,14 @@ object TextIndexApp {
     val fs = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(staging(indexDir), true) // superseded, not healed
-    spark.range(1).select(lit(nBuckets).as("n_buckets"))
-      .write.mode("overwrite").parquet(s"$indexDir/conf")
     writePostings(postingsOf(docs, nBuckets), s"$indexDir/postings")
     writeLens(lensOf(docs), s"$indexDir/doclens")
     docs.agg(max(col("doc_id")).as("max_doc_id"))
       .write.mode("overwrite").parquet(s"$indexDir/meta")
     // the router geometry rides the postings manifest from build on
-    // (the Sinks.rebucket convention: count and layout in ONE rename);
-    // the conf/ table stays as the fallback for manifests without the
-    // line — which are exactly the PRE-rebucket generations, whose
-    // layout used the build-time count conf records
+    // (the Sinks.rebucket convention: count and layout in ONE rename)
     Snapshots.commit(fs, new Path(s"$indexDir/postings"),
-      nbuckets = Some(nBuckets))
+      settings = Snapshots.Settings(Some(nBuckets)))
     Snapshots.commit(fs, new Path(s"$indexDir/doclens"))
     // a REBUILD over an existing dir starts a fresh group history —
     // stale generations must not outlive the tables they described
@@ -150,24 +143,19 @@ object TextIndexApp {
     advanceGroup(fs, indexDir)
   }
 
-  /** The term-router bucket count. HEAD resolution (writers, unpinned
-    * queries): the newest postings manifest's `nbuckets` line — the
-    * only reader that survives an online [[rebucket]] — falling back
-    * to `conf/` for indexes whose manifests predate the line. PINNED
-    * resolution (`pinnedPostings`): the NAMED manifest's line, so a
-    * group-pinned query planned across a rebucket routes and prunes
-    * with the geometry of the generation it reads, never the head's;
-    * a pinned pre-rebucket manifest has no line and falls back to
-    * `conf/`, which records exactly that build-time geometry. */
+  /** The term-router bucket count: the `nbuckets` line of the newest
+    * postings manifest (writers, unpinned queries) or of the manifest
+    * `pinnedPostings` names, so a group-pinned query planned across a
+    * rebucket routes and prunes with the geometry of the generation
+    * it reads, never the head's. */
   private def nBucketsOf(spark: SparkSession, indexDir: String,
                          pinnedPostings: Option[Int] = None): Int = {
     val fs = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val root = new Path(s"$indexDir/postings")
-    pinnedPostings.flatMap(v => Snapshots.bucketCountAt(fs, root, v))
-      .orElse(if (pinnedPostings.isDefined) None
-              else Snapshots.currentBucketCount(fs, root))
-      .getOrElse(spark.read.parquet(s"$indexDir/conf").head.getInt(0))
+    Snapshots.settings(fs, root, pinnedPostings).nbuckets.getOrElse(
+      throw new IllegalStateException(
+        s"$root records no router bucket count (no manifest `nbuckets` line)"))
   }
 
   /** Append `delta` documents. Idempotent under replay; refuses a
@@ -255,7 +243,7 @@ object TextIndexApp {
     *    ([[nBucketsOf]]) and can never route against the wrong layout;
     *  - a reader planned before the commit executes the complete OLD
     *    layout (grace window / group pins — and it PRUNES with the old
-    *    count too, via [[Snapshots.bucketCountAt]] on its pinned
+    *    count too, via [[Snapshots.settings]] of its pinned
     *    manifest); one planned after sees the complete new layout with
     *    the new count — never a mix;
     *  - a crash at any stage heals at the next writer entry to exactly
@@ -298,7 +286,8 @@ object TextIndexApp {
       }
       if (cur.isEmpty) {
         // nothing to move — the count flip is a bare commit
-        Snapshots.commit(fs, root, nbuckets = Some(newBuckets))
+        Snapshots.commit(fs, root,
+          settings = Snapshots.Settings(Some(newBuckets)))
         advanceGroup(fs, indexDir)
         return
       }
@@ -319,7 +308,8 @@ object TextIndexApp {
       // count rides the journal so a crash-healed rebucket still flips
       // count and layout together), install all-or-nothing, commit
       Snapshots.writePending(fs, root, replaced = cur,
-        merged = moves.map(_._1), nbuckets = Some(newBuckets))
+        merged = moves.map(_._1),
+        settings = Snapshots.Settings(Some(newBuckets)))
       StagedCommit.publishOps(fs, stg, moves.map(_._2))
       Snapshots.commitPending(fs, root)
       advanceGroup(fs, indexDir)
@@ -341,14 +331,14 @@ object TextIndexApp {
     * lexical twin of [[graft.sinks.Sinks.autoWiden]]): consult the
     * postings table's pinned bytes against a per-bucket target and
     * [[rebucket]] online when the recommendation exceeds the current
-    * count by `widenFactor` (hysteresis). Bytes only — see
+    * count by [[graft.sinks.Sinks.WidenFactor]]. Bytes only — see
     * [[DefaultPostingsBucketBytes]] for why no rows term. Never
     * narrows. Returns the new count when it widened. */
   def autoWiden(spark: SparkSession, indexDir: String,
-                targetBytesPerBucket: Long = DefaultPostingsBucketBytes,
-                widenFactor: Double = 2.0): Option[Int] = {
-    require(targetBytesPerBucket > 0 && widenFactor >= 1.0,
-      s"bad autoWiden knobs ($targetBytesPerBucket, $widenFactor)")
+                targetBytesPerBucket: Long = DefaultPostingsBucketBytes)
+      : Option[Int] = {
+    require(targetBytesPerBucket > 0,
+      s"target bytes per bucket must be positive (got $targetBytesPerBucket)")
     val fs = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val root = new Path(s"$indexDir/postings")
@@ -358,7 +348,9 @@ object TextIndexApp {
         fs.getFileStatus(new Path(root, f)).getLen).getOrElse(0L)).sum
     val rec = graft.sinks.Sinks.unitsFor(bytes, targetBytesPerBucket)
     val cur = nBucketsOf(spark, indexDir)
-    if (rec >= cur * widenFactor) { rebucket(spark, indexDir, rec); Some(rec) }
+    if (rec >= cur * graft.sinks.Sinks.WidenFactor) {
+      rebucket(spark, indexDir, rec); Some(rec)
+    }
     else None
   }
 

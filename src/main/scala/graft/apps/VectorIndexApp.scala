@@ -58,8 +58,8 @@ object VectorIndexApp {
     * generation 0 is the BUILD's books at the index root (the
     * pre-retrain layout, unchanged); generation N ≥ 1 is a
     * [[retrain]]'s `trained/g<N>/` subtree. Which generation a reader
-    * resolves rides the CODES MANIFEST (`trainedgen` line,
-    * [[Snapshots.trainedGenAt]]) — committed atomically with the
+    * resolves rides the CODES MANIFEST (its `trainedgen` setting,
+    * [[Snapshots.settings]]) — committed atomically with the
     * re-encoded layout it describes, the [[graft.sinks.Sinks
     * .rebucket]] convention — so head and pinned readers alike always
     * pair a codes layout with the exact books that encoded it. Old
@@ -75,8 +75,8 @@ object VectorIndexApp {
   private def trainedGenOf(fs: org.apache.hadoop.fs.FileSystem,
                            indexDir: String,
                            version: Option[Int] = None): Int =
-    Snapshots.trainedGenAt(fs, new Path(s"$indexDir/codes"), version)
-      .getOrElse(0)
+    Snapshots.settings(fs, new Path(s"$indexDir/codes"), version)
+      .trainedGen.getOrElse(0)
 
   /** Train the codebook on `corpus` and materialize the full index. A
     * crash mid-build is healed by re-running (all writes overwrite).
@@ -256,7 +256,7 @@ object VectorIndexApp {
     // the trained generation of the GENERATION THIS QUERY READS — a
     // pinned query planned across an online retrain must assign cells
     // and build LUTs with the books that encoded its pinned layout,
-    // never the head's (the bucketCountAt pattern, r13 verdict task #3).
+    // never the head's (the pinned-settings pattern, r13 verdict task #3).
     // HEAD queries resolve the newest committed codes version ONCE,
     // here, and use it for BOTH the books lookup and the codes read:
     // two independent newest-manifest reads could straddle a concurrent
@@ -420,7 +420,7 @@ object VectorIndexApp {
     *  - the corpus is re-encoded against the new books and staged; the
     *    new layout installs all-or-nothing through [[StagedCommit]]
     *    and flips in ONE snapshot commit whose `trainedgen` line names
-    *    the books that encoded it ([[Snapshots.trainedGenAt]] — the
+    *    the books that encoded it ([[Snapshots.settings]] — the
     *    manifest-rides-the-geometry convention of
     *    [[graft.sinks.Sinks.rebucket]]);
     *  - a reader planned before the flip (head or group-pinned)
@@ -524,7 +524,8 @@ object VectorIndexApp {
       // commit — the flip
       val cur = Snapshots.currentFiles(fs, codesRoot).getOrElse(Nil)
       Snapshots.writePending(fs, codesRoot, replaced = cur,
-        merged = moves.map(_._1), trainedGen = Some(gen))
+        merged = moves.map(_._1),
+        settings = Snapshots.Settings(trainedGen = Some(gen)))
       StagedCommit.publishOps(fs, stg, moves.map(_._2))
       Snapshots.commitPending(fs, codesRoot)
     }
@@ -546,24 +547,23 @@ object VectorIndexApp {
     * knob that is BY NATURE a rebuild (see [[retrain]]): consult
     * rows-per-cell over the pinned codes snapshot (footer-only count)
     * against `targetRowsPerCell` and [[retrain]] to the recommendation
-    * when it exceeds the current cell count by `widenFactor`
-    * (hysteresis). Never narrows. Returns the new cell count when it
+    * when it exceeds the current cell count by
+    * [[graft.sinks.Sinks.WidenFactor]]. Never narrows. Returns the new cell count when it
     * re-trained.
     *
     * `corpus` is an explicit REQUIRED dependency because a retrain
     * re-encodes every vector — there is no cheap re-route here, and an
     * API that pretended otherwise would hide a full-corpus pass behind
     * a maintenance flag. The hysteresis bounds the amortized cost at
-    * ≤ one re-encode per `widenFactor`× corpus growth — the standard
+    * ≤ one re-encode per doubling of the corpus — the standard
     * grow-by-doubling amortization — and the whole pass runs OFF the
     * serving path (pinned readers flip at the group advance).
     * The PQ flavor is inherited ([[retrain]]'s `pq = None`). */
   def autoRetrain(spark: SparkSession, corpus: DataFrame, indexDir: String,
                   targetRowsPerCell: Long = DefaultRowsPerCell,
-                  widenFactor: Double = 2.0,
                   iters: Int = 4): Option[Int] = {
-    require(targetRowsPerCell > 0 && widenFactor >= 1.0,
-      s"bad autoRetrain knobs ($targetRowsPerCell, $widenFactor)")
+    require(targetRowsPerCell > 0,
+      s"target rows per cell must be positive (got $targetRowsPerCell)")
     val fs = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(s"$indexDir/meta"))) return None
@@ -588,7 +588,7 @@ object VectorIndexApp {
     val gen = trainedGenOf(fs, indexDir)
     val cur = requestedCells(spark, trainedDir(indexDir, gen))
     val rec = graft.sinks.Sinks.unitsFor(rows, targetRowsPerCell)
-    if (rec >= cur * widenFactor) {
+    if (rec >= cur * graft.sinks.Sinks.WidenFactor) {
       retrain(spark, corpus, indexDir, kCells = rec, iters = iters)
       Some(rec)
     } else None

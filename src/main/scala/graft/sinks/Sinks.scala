@@ -59,9 +59,11 @@ object Sinks {
       .parquet(path)
 
   /** Number of hash buckets a keyed table is partitioned into. Sized so
-    * one bucket ≈ table/64 — at 100 TB, raise via the `nBuckets` knob
-    * (the layout is self-describing, but a table must keep one value for
-    * its lifetime: the bucket of a key is `stable60(key) % nBuckets`). */
+    * one bucket ≈ table/64 — at 100 TB, raise via the `nBuckets` knob.
+    * The count is recorded in the table's [[Snapshots]] manifest from
+    * its first commit on, and every later mutation hashes with the
+    * RECORDED count (the bucket of a key is `stable60(key) % n`);
+    * only [[rebucket]] changes it. */
   val DefaultUpsertBuckets = 64
 
   /** Engine-portable bucket id of the concatenated key columns — the same
@@ -106,24 +108,18 @@ object Sinks {
                   dropCols: Seq[String] = Nil,
                   nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path) {
-      upsertKeyedBody(spark, fs, incoming, keys, order, path, dropCols,
-        nBuckets)
+    locked(fs, path, Some(nBuckets)) { n =>
+      upsertKeyedBody(spark, fs, incoming, keys, order, path, dropCols, n)
     }
   }
 
   private def upsertKeyedBody(spark: SparkSession, fs: FileSystem,
                               incoming: DataFrame, keys: Seq[String],
                               order: Seq[String], path: String,
-                              dropCols: Seq[String], nBuckets: Int): Unit = {
-    // the layout is self-describing: the bucket count is recorded at
-    // table creation and every later merge USES THE RECORDED VALUE — a
-    // caller passing a different nBuckets would otherwise hash keys into
-    // the wrong buckets and silently duplicate them across the table
-    val effectiveBuckets = readOrWriteBucketCount(fs, path, nBuckets)
-    val withB = incoming.withColumn("__bucket", bucketOf(keys, effectiveBuckets))
+                              dropCols: Seq[String], n: Int): Unit = {
+    val withB = incoming.withColumn("__bucket", bucketOf(keys, n))
     val touched = withB.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted // ≤ nBuckets values, driver-safe
+      .collect().map(_.getInt(0)).sorted // ≤ n values, driver-safe
     if (touched.isEmpty) return
     val merged = liveTouched(spark, fs, path, touched.toIndexedSeq) match {
       case Some(cur) => cur.unionByName(withB, allowMissingColumns = true)
@@ -131,7 +127,8 @@ object Sinks {
     }
     val deduped = DedupOps.keepLast(merged, keys.map(col), order.map(col))
       .drop(dropCols: _*)
-    stageAndInstall(spark, fs, path, deduped, touched.toIndexedSeq)
+    stageAndInstall(spark, fs, path, deduped, touched.toIndexedSeq,
+      Snapshots.Settings(Some(n)))
   }
 
   /** Run a keyed-table mutation under the table's single-writer lock
@@ -142,17 +139,26 @@ object Sinks {
     * heal can adjudicate the pending journal), then the journal. A
     * table without a manifest — a new table, or a raw bucket layout
     * written by an older version — is adopted by one bootstrap commit
-    * that lists its current files as version 1. */
-  private def locked(fs: FileSystem, path: String)(body: => Unit): Unit = {
+    * that lists its current files as version 1 and records its bucket
+    * count: the one the older version recorded, else the writer's
+    * `nBuckets`. `body` gets the table's recorded count (`nBuckets`,
+    * else the default, while the table holds no data): mutations hash
+    * with it, never with a caller's differing `nBuckets`, which would
+    * put a key in a second bucket and duplicate it. */
+  private def locked(fs: FileSystem, path: String,
+                     nBuckets: Option[Int] = None)
+                    (body: Int => Unit): Unit = {
     val root = new Path(path)
     StagedCommit.withWriterLock(fs, root) {
       StagedCommit.heal(fs, new Path(path + ".staging"))
       Snapshots.heal(fs, root)
-      if (Snapshots.currentFiles(fs, root).isEmpty) {
+      if (Snapshots.currentVersion(fs, root).isEmpty) {
         adoptLegacyOld(fs, path)
-        Snapshots.commit(fs, root); ()
+        Snapshots.commit(fs, root, settings = Snapshots.Settings(
+          recordedBucketCount(fs, path, None).orElse(nBuckets))); ()
       }
-      body
+      body(recordedBucketCount(fs, path, Snapshots.settings(fs, root).nbuckets)
+        .orElse(nBuckets).getOrElse(DefaultUpsertBuckets))
     }
   }
 
@@ -180,14 +186,20 @@ object Sinks {
     * manifest — never the raw directories, which may also hold the
     * previous commits' retired (grace-window) files. */
   private def liveTouched(spark: SparkSession, fs: FileSystem, path: String,
-                          touched: Seq[Int]): Option[DataFrame] = {
-    val root = new Path(path)
+                          touched: Seq[Int]): Option[DataFrame] =
+    touchedFiles(spark, path,
+      Snapshots.currentFiles(fs, new Path(path)).getOrElse(Nil), touched)
+
+  /** The rows of `files` (a manifest's data list) in the `touched`
+    * buckets, or None when they hold none. */
+  private def touchedFiles(spark: SparkSession, path: String,
+                           files: Seq[String],
+                           touched: Seq[Int]): Option[DataFrame] = {
     val names = touched.map(b => s"__bucket=$b").toSet
-    val files = Snapshots.currentFiles(fs, root).getOrElse(Nil)
-      .filter(f => names.contains(f.takeWhile(_ != '/')))
-      .map(p => new Path(root, p).toString)
-    if (files.isEmpty) None
-    else Some(spark.read.option("basePath", path).parquet(files: _*))
+    val hit = files.filter(f => names.contains(f.takeWhile(_ != '/')))
+      .map(p => new Path(path, p).toString)
+    if (hit.isEmpty) None
+    else Some(spark.read.option("basePath", path).parquet(hit: _*))
   }
 
   /** THE commit of every keyed-table mutation: stage `df` (which must
@@ -205,12 +217,15 @@ object Sinks {
     * pre- or post-batch state, never a mix, never a deleted file.
     * Crash-safe via [[locked]]'s heal-first discipline: the pending
     * journal is either aborted (nothing installed) or completed
-    * (everything installed) on the next writer entry. */
+    * (everything installed) on the next writer entry. `settings` ride
+    * the journal and the commit — the bucket count `df` was hashed
+    * with, plus a rebucket's graduation target — so a rebucket's
+    * count, target and layout flip atomically in the crash-heal path
+    * too, and a table an older version wrote records its count. */
   private def stageAndInstall(spark: SparkSession, fs: FileSystem,
                               path: String, df: DataFrame,
                               buckets: Seq[Int],
-                              newBucketCount: Option[Int] = None,
-                              newTargetBytes: Option[Long] = None): Unit = {
+                              settings: Snapshots.Settings): Unit = {
     val root = new Path(path)
     val staging = new Path(path + ".staging")
     df.write.mode("overwrite").partitionBy("__bucket")
@@ -227,11 +242,7 @@ object Sinks {
     }
     if (replaced.isEmpty && moves.isEmpty) { fs.delete(staging, true); return }
     fs.mkdirs(root)
-    // newBucketCount / newTargetBytes ride the pending journal and the
-    // commit, so a rebucket's count+target+layout flip is atomic in
-    // the crash-heal path too
-    Snapshots.writePending(fs, root, replaced, moves.map(_._1),
-      newBucketCount, newTargetBytes)
+    Snapshots.writePending(fs, root, replaced, moves.map(_._1), settings)
     StagedCommit.publishOps(fs, staging, moves.map(_._2))
     Snapshots.commitPending(fs, root)
   }
@@ -264,22 +275,20 @@ object Sinks {
                     combine: Seq[Column], batchId: Long, path: String,
                     nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path) {
-      upsertCombineBody(spark, fs, delta, keys, combine, batchId, path,
-        nBuckets)
+    locked(fs, path, Some(nBuckets)) { n =>
+      upsertCombineBody(spark, fs, delta, keys, combine, batchId, path, n)
     }
   }
 
   private def upsertCombineBody(spark: SparkSession, fs: FileSystem,
                                 delta: DataFrame, keys: Seq[String],
                                 combine: Seq[Column], batchId: Long,
-                                path: String, nBuckets: Int): Unit = {
-    val effectiveBuckets = readOrWriteBucketCount(fs, path, nBuckets)
+                                path: String, n: Int): Unit = {
     val withB = delta
-      .withColumn("__bucket", bucketOf(keys, effectiveBuckets))
+      .withColumn("__bucket", bucketOf(keys, n))
       .withColumn("__mart_batch", lit(batchId))
     val touched = withB.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).sorted // ≤ nBuckets values, driver-safe
+      .collect().map(_.getInt(0)).sorted // ≤ n values, driver-safe
     if (touched.isEmpty) return
     val (skip, current) =
       liveTouched(spark, fs, path, touched.toIndexedSeq) match {
@@ -308,7 +317,8 @@ object Sinks {
       .groupBy((keys :+ "__bucket").map(col): _*)
       .agg(combine.head, combine.tail :+
         max(col("__mart_batch")).as("__mart_batch"): _*)
-    stageAndInstall(spark, fs, path, combined, todo.toIndexedSeq)
+    stageAndInstall(spark, fs, path, combined, todo.toIndexedSeq,
+      Snapshots.Settings(Some(n)))
   }
 
   /** Read a table written by [[upsertCombine]] without its layout and
@@ -356,14 +366,14 @@ object Sinks {
                   predicate: Column): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path) {
+    locked(fs, path) { n =>
       val hit = coalesce(predicate, lit(false))
       val affected = Snapshots.readTable(spark, new Path(path)).filter(hit)
         .select("__bucket").distinct().collect().map(_.getInt(0)).sorted
       if (affected.nonEmpty)
         liveTouched(spark, fs, path, affected.toIndexedSeq).foreach { live =>
           stageAndInstall(spark, fs, path, live.filter(!hit),
-            affected.toIndexedSeq)
+            affected.toIndexedSeq, Snapshots.Settings(Some(n)))
         }
     }
   }
@@ -386,8 +396,7 @@ object Sinks {
                    keys: Seq[String], combine: Seq[Column]): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path) {
-      val n = readOrWriteBucketCount(fs, path, DefaultUpsertBuckets)
+    locked(fs, path) { n =>
       val table = Snapshots.readTable(spark, new Path(path))
       val hit = coalesce(predicate, lit(false))
       val srcBuckets = table.filter(hit)
@@ -409,7 +418,8 @@ object Sinks {
         val merged = kept.unionByName(moved, allowMissingColumns = true)
           .groupBy((keys :+ "__bucket").map(col): _*)
           .agg(combine.head, combine.tail: _*)
-        stageAndInstall(spark, fs, path, merged, touched)
+        stageAndInstall(spark, fs, path, merged, touched,
+          Snapshots.Settings(Some(n)))
       }
     }
   }
@@ -428,7 +438,8 @@ object Sinks {
     *    the same pending-journal → all-or-nothing install → snapshot
     *    commit path every keyed mutation uses;
     *  - the new bucket COUNT rides the commit itself (the manifest's
-    *    `nbuckets` line), so count and layout flip in ONE rename —
+    *    `nbuckets` line, the table's only record of its count), so
+    *    count and layout flip in ONE rename —
     *    every later merge, prune, and `readKeyedFor` resolves the
     *    count from the manifest and can never hash against the wrong
     *    layout;
@@ -461,15 +472,14 @@ object Sinks {
         "re-hashing could merge a replayed bucket's stamp over an " +
         "unreplayed key's delta. Replay any in-flight batch, write " +
         "once to upgrade, then rebucket.")
-    locked(fs, path) {
-      val oldN = readOrWriteBucketCount(fs, path, DefaultUpsertBuckets)
+    locked(fs, path) { oldN =>
       if (oldN != newN) {
+        val settings = Snapshots.Settings(Some(newN), targetBytes = targetBytes)
         val curFiles = Snapshots.currentFiles(fs, new Path(path))
           .getOrElse(Nil)
         if (curFiles.isEmpty) {
           // nothing to move — the count flip is a bare commit
-          Snapshots.commit(fs, new Path(path), nbuckets = Some(newN),
-            targetBytes = targetBytes); ()
+          Snapshots.commit(fs, new Path(path), settings = settings); ()
         } else {
           val table = Snapshots.readTable(spark, new Path(path))
           val oldBuckets = curFiles.map(_.takeWhile(_ != '/'))
@@ -488,22 +498,15 @@ object Sinks {
           // rehash once just to learn them
           stageAndInstall(spark, fs, path, restaged,
             (oldBuckets ++ (0 until newN)).distinct.sorted.toIndexedSeq,
-            newBucketCount = Some(newN), newTargetBytes = targetBytes)
+            settings)
         }
-        // best-effort sidecar sync for external layout consumers; the
-        // manifest line is authoritative from this commit on, so a
-        // crash landing between the commit above and this write is
-        // harmless
-        val marker = new Path(path + ".nbuckets")
-        val out = fs.create(marker, true)
-        try out.write(newN.toString.getBytes("UTF-8")) finally out.close()
       }
     }
   }
 
   /** Set a snapshot-managed table's PER-TABLE compaction graduation
     * size — one bare snapshot commit carrying the `targetbytes` line
-    * ([[graft.apps.Snapshots.currentTargetBytes]]); every later
+    * ([[graft.apps.Snapshots.Settings]]); every later
     * [[graft.apps.Compaction]] pass over this table graduates files at
     * THIS size instead of the global default. The manifest-ceiling
     * knob: a table that grew 100× keeps its manifest line count flat
@@ -524,8 +527,9 @@ object Sinks {
       s"setCompactionTarget requires a snapshot-managed table; $path " +
         "has no manifest to carry the setting — write once to " +
         "upgrade first.")
-    locked(fs, path) {
-      Snapshots.commit(fs, new Path(path), targetBytes = Some(bytes)); ()
+    locked(fs, path) { _ =>
+      Snapshots.commit(fs, new Path(path),
+        settings = Snapshots.Settings(targetBytes = Some(bytes))); ()
     }
   }
 
@@ -617,13 +621,20 @@ object Sinks {
       unitsFor(rows, targetRowsPerBucket))
   }
 
+  /** The hysteresis of every widening policy ([[autoWiden]],
+    * [[graft.apps.TextIndexApp.autoWiden]],
+    * [[graft.apps.VectorIndexApp.autoRetrain]]): widen only when the
+    * recommendation is at least this multiple of the current geometry.
+    * A recommendation drifting a few percent past the layout must not
+    * thrash a full rewrite every cycle, and 2× bounds the amortized
+    * cost at one rewrite per doubling of the data. */
+  private[graft] val WidenFactor = 2.0
+
   /** AUTO-WIDEN policy (r13 verdict task #4) — the round-13 manual
     * knob turned into a decision the maintenance cycle makes itself:
     * consult [[recommendedBuckets]] against the table's recorded
     * count and [[rebucket]] when the recommendation exceeds it by
-    * `widenFactor` (hysteresis — a recommendation drifting a few
-    * percent past the layout must not thrash a full-table rewrite
-    * every cycle). Never NARROWS: a narrow recommendation can be a
+    * [[WidenFactor]]. Never NARROWS: a narrow recommendation can be a
     * transient (retention just swept; a probe table mid-load), and
     * shrinking is a deliberate operator action with [[rebucket]].
     * Returns the new count when it widened, None otherwise (missing
@@ -631,18 +642,16 @@ object Sinks {
     * per cycle — the mart widens at most ONE table per sweep. */
   def autoWiden(spark: SparkSession, path: String, keys: Seq[String],
                 targetBytesPerBucket: Long = DefaultBucketTargetBytes,
-                targetRowsPerBucket: Long = DefaultBucketTargetRows,
-                widenFactor: Double = 2.0): Option[Int] = {
-    require(widenFactor >= 1.0,
-      s"widenFactor must be >= 1 (got $widenFactor)")
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path)) ||
-      Snapshots.currentFiles(fs, new Path(path)).isEmpty) return None
-    val cur = readOrWriteBucketCount(fs, path, DefaultUpsertBuckets)
+                targetRowsPerBucket: Long = DefaultBucketTargetRows)
+      : Option[Int] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (Snapshots.currentVersion(fs, root).isEmpty) return None
+    val cur = recordedBucketCount(fs, path,
+      Snapshots.settings(fs, root).nbuckets).getOrElse(return None)
     val rec = recommendedBuckets(spark, path, targetBytesPerBucket,
       targetRowsPerBucket)
-    if (rec >= cur * widenFactor) {
+    if (rec >= cur * WidenFactor) {
       rebucket(spark, path, keys, rec)
       Some(rec)
     } else None
@@ -666,41 +675,48 @@ object Sinks {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return None
-    val n = readOrWriteBucketCount(fs, path, DefaultUpsertBuckets)
+    // ONE manifest resolution for the count and the file list, so the
+    // prune never hashes with one layout's count into another's files
+    val snap = Snapshots.currentFilesAndSettings(fs, root)
+    val n = recordedBucketCount(fs, path, snap.flatMap(_._2.nbuckets))
+      .getOrElse(return None)
     val touched = forKeys.select(bucketOf(keys, n).as("__b"))
       .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val live =
-      if (Snapshots.currentFiles(fs, root).isDefined)
-        liveTouched(spark, fs, path, touched)
-      else {
+    val live = snap match {
+      case Some((files, _)) => touchedFiles(spark, path, files, touched)
+      case None =>
         val dirs = touched.map(b => new Path(root, s"__bucket=$b"))
           .filter(fs.exists).map(_.toString)
         if (dirs.isEmpty) None
         else Some(spark.read.option("basePath", path).parquet(dirs: _*))
-      }
+    }
     live.map(_.drop("__bucket"))
   }
 
-  /** The table's recorded bucket count, creating the marker on first
-    * write. The snapshot manifest's `nbuckets` line is authoritative
-    * when present — it commits ATOMICALLY with the layout it describes
-    * ([[rebucket]]); the sidecar `.nbuckets` file beside the table
-    * (not inside it — partition discovery must only see `__bucket=`
-    * dirs) covers tables never rebucketed. */
-  private def readOrWriteBucketCount(fs: FileSystem, path: String,
-                                     requested: Int): Int =
-    Snapshots.currentBucketCount(fs, new Path(path)).getOrElse {
-      val marker = new Path(path + ".nbuckets")
-      if (fs.exists(marker)) {
-        val in = fs.open(marker)
-        val n = try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-          finally in.close()
-        n
+  /** The bucket count `path` was written with: `manifest` (its head
+    * manifest's `nbuckets` line), else the `<table>.nbuckets` sidecar
+    * that older versions kept beside the table. Nothing writes the
+    * sidecar any more; it serves the tables whose manifests lack the
+    * line — a legacy raw table at its adoption, a table an older
+    * version wrote — and each records its count at its next commit.
+    * None for a table with no data yet. A table that holds data but
+    * records no count fails loudly: hashing its keys with a guessed
+    * count would prune and merge the wrong buckets. */
+  private def recordedBucketCount(fs: FileSystem, path: String,
+                                  manifest: Option[Int]): Option[Int] =
+    manifest.orElse {
+      val sidecar = new Path(path + ".nbuckets")
+      if (fs.exists(sidecar)) {
+        val in = fs.open(sidecar)
+        try Some(scala.io.Source.fromInputStream(in).mkString.trim.toInt)
+        finally in.close()
       } else {
-        fs.mkdirs(marker.getParent)
-        val out = fs.create(marker, true)
-        try out.write(requested.toString.getBytes("UTF-8")) finally out.close()
-        requested
+        val root = new Path(path)
+        require(Compaction.partitionDirs(fs, root)
+          .forall(Compaction.visibleFiles(fs, _).isEmpty),
+          s"$path holds data but records no bucket count (no manifest " +
+            "`nbuckets` line, no .nbuckets sidecar)")
+        None
       }
     }
 

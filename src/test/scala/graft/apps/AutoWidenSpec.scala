@@ -32,7 +32,7 @@ class AutoWidenSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration)
 
   private def countOf(table: String): Option[Int] =
-    Snapshots.currentBucketCount(fs, new Path(table))
+    Snapshots.settings(fs, new Path(table)).nbuckets
 
   test("mart sweeps auto-widen one grown table per cycle, no-op at stable scale, queries exact") {
     val dir = Files.createTempDirectory("autowiden-mart").toString
@@ -46,11 +46,12 @@ class AutoWidenSpec extends SparkSpec {
     val ret = EventMartStream.Retention(decaySweepEveryN = 1,
       ttlSweepEveryN = Int.MaxValue) // autoWiden defaults ON
     // stable scale: 2k users — the recommendation stays inside the
-    // 64-bucket default's hysteresis, nothing rebuckets (a rebucket
-    // stamps the manifest's nbuckets line, so None == never widened)
+    // 64-bucket default's hysteresis, nothing rebuckets (each table's
+    // manifest records its count from its first commit, so 64 == never
+    // widened)
     EventMartStream.processBatch(events(2000, 0), 1L, dir, ret)
     val tables = Seq("uv_days", "decay_weeks", "trans_state", "sess_state")
-    tables.foreach(t => assert(countOf(s"$dir/$t").isEmpty,
+    tables.foreach(t => assert(countOf(s"$dir/$t").contains(64),
       s"$t widened at stable scale"))
 
     // 35× growth in one batch: uv_days (and friends) cross the
@@ -58,13 +59,13 @@ class AutoWidenSpec extends SparkSpec {
     EventMartStream.processBatch(events(68000, 10000000L), 2L, dir, ret)
     assert(countOf(s"$dir/uv_days").exists(_ > 64),
       "the grown uv_days did not auto-widen")
-    assert(countOf(s"$dir/decay_weeks").isEmpty,
+    assert(countOf(s"$dir/decay_weeks").contains(64),
       "more than one table widened in one cycle")
 
     // the next cycles catch the remaining grown tables, one each
     EventMartStream.processBatch(events(10, 20000000L), 3L, dir, ret)
     assert(countOf(s"$dir/decay_weeks").exists(_ > 64))
-    assert(countOf(s"$dir/trans_state").isEmpty)
+    assert(countOf(s"$dir/trans_state").contains(64))
     EventMartStream.processBatch(events(10, 20000100L), 4L, dir, ret)
     assert(countOf(s"$dir/trans_state").exists(_ > 64))
     EventMartStream.processBatch(events(10, 20000200L), 5L, dir, ret)
@@ -113,7 +114,7 @@ class AutoWidenSpec extends SparkSpec {
     // bucket vs a kilobyte corpus)
     HybridSearchApp.append(spark, docsOf(120L until 140L),
       vecsOf(120L until 140L), tIdx, vIdx, grp)
-    assert(Snapshots.currentBucketCount(fs, new Path(s"$tIdx/postings"))
+    assert(Snapshots.settings(fs, new Path(s"$tIdx/postings")).nbuckets
       .contains(8), "the default target widened a kilobyte corpus")
 
     // size the target off the table's own bytes so the recommendation
@@ -125,7 +126,7 @@ class AutoWidenSpec extends SparkSpec {
     HybridSearchApp.append(spark, docsOf(140L until 150L),
       vecsOf(140L until 150L), tIdx, vIdx, grp,
       textBucketTargetBytes = target)
-    val widened = Snapshots.currentBucketCount(fs, root)
+    val widened = Snapshots.settings(fs, root).nbuckets
     assert(widened.exists(_ > 8), s"router did not widen (got $widened)")
 
     // identity: widening is pure re-routing, so the auto-widened index
@@ -141,7 +142,7 @@ class AutoWidenSpec extends SparkSpec {
     HybridSearchApp.append(spark, docsOf(150L until 152L),
       vecsOf(150L until 152L), tIdx, vIdx, grp,
       textBucketTargetBytes = target)
-    assert(Snapshots.currentBucketCount(fs, root) == widened,
+    assert(Snapshots.settings(fs, root).nbuckets == widened,
       "a same-scale cycle re-widened the router")
   }
 }

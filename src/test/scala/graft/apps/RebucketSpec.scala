@@ -120,7 +120,7 @@ class RebucketSpec extends SparkSpec {
       // the journal aborted (old count, old layout) or completed (new
       // count, new layout) — never a mismatch
       combineInto(dir, 0 until 64, 10, 1)
-      val n = Snapshots.currentBucketCount(fs, new Path(dir))
+      val n = Snapshots.settings(fs, new Path(dir)).nbuckets
         .getOrElse(4)
       val misplaced = Snapshots.readTable(spark, new Path(dir))
         .filter(col("__bucket") =!=
@@ -133,7 +133,7 @@ class RebucketSpec extends SparkSpec {
         s"crash at $k: post-heal merge lost or duplicated rows")
       // the rebucket replay converges (idempotent once applied)
       Sinks.rebucket(spark, dir, Seq("k"), newN = 16)
-      assert(Snapshots.currentBucketCount(fs, new Path(dir)) == Some(16))
+      assert(Snapshots.settings(fs, new Path(dir)).nbuckets == Some(16))
       assert(rows(Sinks.readCombined(spark, dir)) ==
         (0 until 64).map(x => x.toLong -> 11L).toMap)
     }
@@ -154,7 +154,7 @@ class RebucketSpec extends SparkSpec {
     // the rebucket applies
     combineInto(dir, 0 until 16, 10, 1)
     Sinks.rebucket(spark, dir, Seq("k"), newN = 8)
-    assert(Snapshots.currentBucketCount(fs, new Path(dir)) == Some(8))
+    assert(Snapshots.settings(fs, new Path(dir)).nbuckets == Some(8))
     assert(rows(Sinks.readCombined(spark, dir)) ==
       (0 until 16).map(k => k.toLong -> 11L).toMap)
   }
@@ -189,13 +189,13 @@ class RebucketSpec extends SparkSpec {
       targetBytes = Some(123456L))
     assert(headVersion(dir) == v0 + 1,
       "count+target+layout must flip in exactly one snapshot commit")
-    assert(Snapshots.currentBucketCount(fs, new Path(dir)) == Some(16))
-    assert(Snapshots.currentTargetBytes(fs, new Path(dir)) == Some(123456L))
+    assert(Snapshots.settings(fs, new Path(dir)).nbuckets == Some(16))
+    assert(Snapshots.settings(fs, new Path(dir)).targetBytes == Some(123456L))
     assert(rows(Sinks.readCombined(spark, dir)) == before)
 
     // later commits carry the target forward like the count
     combineInto(dir, 0 until 64, 10, 1)
-    assert(Snapshots.currentTargetBytes(fs, new Path(dir)) == Some(123456L),
+    assert(Snapshots.settings(fs, new Path(dir)).targetBytes == Some(123456L),
       "a later merge dropped the per-table target")
 
     // a crash mid-install heals count, target and layout TOGETHER
@@ -204,8 +204,8 @@ class RebucketSpec extends SparkSpec {
       Sinks.rebucket(spark, dir, Seq("k"), newN = 8, targetBytes = Some(777L))
     } finally StagedCommit.crashAfterMoves = Int.MaxValue
     combineInto(dir, 0 until 64, 100, 2) // writer entry heals
-    val n = Snapshots.currentBucketCount(fs, new Path(dir)).get
-    val tb = Snapshots.currentTargetBytes(fs, new Path(dir)).get
+    val n = Snapshots.settings(fs, new Path(dir)).nbuckets.get
+    val tb = Snapshots.settings(fs, new Path(dir)).targetBytes.get
     assert((n, tb) == (8, 777L) || (n, tb) == (16, 123456L),
       s"heal split the count/target pair: ($n, $tb)")
     val misplaced = Snapshots.readTable(spark, new Path(dir))
@@ -218,8 +218,8 @@ class RebucketSpec extends SparkSpec {
     val vs = headVersion(dir)
     Sinks.setCompactionTarget(spark, dir, 999L)
     assert(headVersion(dir) == vs + 1)
-    assert(Snapshots.currentTargetBytes(fs, new Path(dir)) == Some(999L))
-    assert(Snapshots.currentBucketCount(fs, new Path(dir)) == Some(n))
+    assert(Snapshots.settings(fs, new Path(dir)).targetBytes == Some(999L))
+    assert(Snapshots.settings(fs, new Path(dir)).nbuckets == Some(n))
   }
 
   test("compaction graduates at the manifest's per-table target, not the global default") {
@@ -278,7 +278,7 @@ class RebucketSpec extends SparkSpec {
     val rec = Sinks.recommendedBuckets(spark, dir,
       math.max(1L, totalBytes / 4))
     Sinks.rebucket(spark, dir, Seq("k"), newN = rec)
-    assert(Snapshots.currentBucketCount(fs, root) == Some(rec))
+    assert(Snapshots.settings(fs, root).nbuckets == Some(rec))
     assert(Sinks.readCombined(spark, dir).count() == 256)
   }
 

@@ -45,7 +45,7 @@ class TextIndexRebucketSpec extends SparkSpec {
 
   private val probeIds = (0L until 4L).toSeq
   private def countOf(idx: String): Option[Int] =
-    Snapshots.currentBucketCount(fs, new Path(s"$idx/postings"))
+    Snapshots.settings(fs, new Path(s"$idx/postings")).nbuckets
 
   test("rebucket preserves results, reroutes appends, and flips count+layout in one commit") {
     val idx = Files.createTempDirectory("tidx-reb").toString

@@ -14,7 +14,7 @@ import graft.SparkSpec
   * trained geometry, so widening it is re-training + re-encoding; the
   * retrain does that LIVE, beside the served index, and flips books +
   * layout in ONE codes-manifest rename (the `trainedgen` line — the
-  * [[Snapshots.bucketCountAt]] pattern). Pinned here:
+  * [[Snapshots.settings]] pattern). Pinned here:
   *
   *  - a retrained index equals a FRESH BUILD at the new geometry
   *    (training is deterministic), and later appends encode against
@@ -54,7 +54,7 @@ class VectorIndexRetrainSpec extends SparkSpec {
       topK, nprobe, rerankK, pinnedCodes = pinned))
 
   private def genOf(idx: String): Option[Int] =
-    Snapshots.trainedGenAt(fs, new Path(s"$idx/codes"))
+    Snapshots.settings(fs, new Path(s"$idx/codes")).trainedGen
 
   test("retrain equals a fresh build at the new geometry; appends encode against the new books") {
     val idx = Files.createTempDirectory("vidx-rt").toString

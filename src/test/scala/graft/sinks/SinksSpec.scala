@@ -2,6 +2,8 @@ package graft.sinks
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -73,6 +75,46 @@ class SinksSpec extends SparkSpec {
     Sinks.upsertKeyed(spark, Seq(KV(1, 2, "a2")).toDF(), Seq("k"), Seq("seq"),
       dir, nBuckets = 64)
     assert(Sinks.readKeyed(spark, dir).as[KV].collect().toSet == Set(KV(1, 2, "a2")))
+  }
+
+  test("the bucket count lives only in the manifest; reads create no file") {
+    val parent = tmp("nbman")
+    val dir = parent + "/table"
+    def tree(): Set[String] = {
+      val root = java.nio.file.Paths.get(parent)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.map(p => root.relativize(p).toString).toSet
+      finally walk.close()
+    }
+    Sinks.upsertKeyed(spark, Seq(KV(1, 1, "a"), KV(2, 1, "b")).toDF(),
+      Seq("k"), Seq("seq"), dir, nBuckets = 8)
+    val snap = new java.io.File(s"$dir/_snap").listFiles()
+      .map(_.getName).filter(_.matches("v\\d+")).sorted
+    assert(snap.nonEmpty)
+    snap.foreach { v =>
+      val first = Files.readAllLines(
+        java.nio.file.Paths.get(s"$dir/_snap/$v")).asScala.headOption
+      assert(first.contains("nbuckets 8"), s"$v starts with $first")
+    }
+    assert(!new java.io.File(s"$dir.nbuckets").exists)
+
+    // a pruned read of the table, and of an empty dir with no recorded
+    // count, leaves the file tree as it was
+    val empty = parent + "/empty"
+    Files.createDirectories(java.nio.file.Paths.get(empty))
+    val before = tree()
+    val keys = Seq(1L, 3L).toDF("k")
+    assert(Sinks.readKeyedFor(spark, dir, keys, Seq("k")).get
+      .filter(col("k").isin(1L, 3L)).as[KV].collect().toSet ==
+      Set(KV(1, 1, "a")))
+    assert(Sinks.readKeyedFor(spark, empty, keys, Seq("k")).isEmpty)
+    assert(tree() == before)
+
+    // data with no recorded count: loud, never a guessed count
+    Seq(KV(1, 1, "a")).toDF().write.parquet(s"$parent/bare/__bucket=0")
+    intercept[IllegalArgumentException] {
+      Sinks.readKeyedFor(spark, s"$parent/bare", keys, Seq("k"))
+    }
   }
 
   test("purgeTombstones: only buckets with old tombstones rewritten; young tombstones survive") {
