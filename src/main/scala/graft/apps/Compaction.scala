@@ -118,6 +118,11 @@ object Compaction {
       !s.getPath.getName.startsWith("."))
   }
 
+  /** Whether `root` (or one of its partition dirs) holds a visible data
+    * file — what a parquet reader of the directory would find. */
+  private[graft] def holdsData(fs: FileSystem, root: Path): Boolean =
+    (partitionDirs(fs, root) :+ root).exists(visibleFiles(fs, _).nonEmpty)
+
   /** Merge every directory in `groups` holding more than `maxFiles`
     * small (< `targetBytes`) visible files down to one file each,
     * committed crash-safe through one [[StagedCommit]] manifest.

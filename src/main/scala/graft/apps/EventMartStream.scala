@@ -214,9 +214,7 @@ object EventMartStream {
       // created for its writer-lock file by [[migrateToGroups]]) has no
       // stamps and therefore no scheme to mismatch
       val preexisting = tables.filter { t =>
-        val p = new Path(s"$martDir/$t")
-        fs.exists(p) && (Compaction.partitionDirs(fs, p) :+ p)
-          .exists(d => Compaction.visibleFiles(fs, d).nonEmpty)
+        Compaction.holdsData(fs, new Path(s"$martDir/$t"))
       }
       if (preexisting.nonEmpty) throw new IllegalStateException(
         s"mart $martDir has state tables (${preexisting.mkString(", ")}) " +
@@ -269,12 +267,17 @@ object EventMartStream {
     *    (replay the batch under the old build first) rather than pin
     *    a torn pair as a group generation.
     *
+    * A member an older version wrote is first adopted into the current
+    * format by [[Sinks.upgrade]] (a no-op for a current one), so the
+    * drained check and the group read only current-format tables.
+    *
     * Idempotent: a dir that already has a group is left unchanged. */
   def migrateToGroups(spark: SparkSession, martDir: String): Unit = {
     val fs = new Path(martDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (Snapshots.resolveGroup(fs, sessGroupRoot(martDir)).isDefined) return
     val members = sessGroupMembers(martDir)
+    members.foreach { case (_, p) => Sinks.upgrade(spark, p.toString) }
     // lock files live under the member roots — make sure they exist
     // (a fresh dir's members may not; an absent member is trivially
     // drained but still gets locked so no first write races us)
@@ -283,19 +286,8 @@ object EventMartStream {
       StagedCommit.withWriterLock(fs, members(1)._2) {
         StagedCommit.withWriterLock(fs, sessGroupRoot(martDir)) {
           requireSessPairDrained(spark, fs, martDir)
-          // a raw (never-snapshot-managed) member cannot be named by a
-          // group — bootstrap-commit it first, adopting its current
-          // files as v1 (the same upgrade step Sinks.locked performs
-          // on first write). An EMPTY dir (just created above for its
-          // lock) must NOT be committed: version 0 = "not yet created"
-          // is the group's own way to name it.
-          members.foreach { case (_, p) =>
-            if (Snapshots.currentFiles(fs, p).isEmpty &&
-              (Compaction.partitionDirs(fs, p) :+ p)
-                .exists(d => Compaction.visibleFiles(fs, d).nonEmpty)) {
-              Snapshots.commit(fs, p); ()
-            }
-          }
+          // an EMPTY member (just created above for its lock) has no
+          // manifest: version 0 = "not yet created" names it
           Snapshots.commitGroup(fs, sessGroupRoot(martDir), members)
           ()
         }
@@ -800,12 +792,10 @@ object EventMartStream {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // "exists" is not enough: during the first write the table dir can
     // exist while still holding zero bucket dirs / zero data files,
-    // and a raw read would then throw UNABLE_TO_INFER_SCHEMA — probe
-    // for at least one visible data file before planning the read
-    val hasData = fs.exists(p) &&
-      (Compaction.partitionDirs(fs, p) :+ p)
-        .exists(d => Compaction.visibleFiles(fs, d).nonEmpty)
-    if (hasData) Sinks.readCombined(spark, path) else empty
+    // whose read would have no schema to infer — probe for at least
+    // one visible data file before planning the read
+    if (Compaction.holdsData(fs, p)) Sinks.readCombined(spark, path)
+    else empty
   }
 
   /** a19's mart: the pair counts are the mart. */

@@ -143,9 +143,8 @@ private[graft] object Snapshots {
     * prunes and decodes with the settings of the generation it reads,
     * never the head's. Empty when the table has no manifest; a pinned
     * version that is gone fails loudly, as in [[readTableAt]]. Reads
-    * only the leading setting lines ([[parseSettings]]): this sits on
-    * every keyed-sink mutation and every `readKeyedFor`, where a full
-    * parse would put a data-list-sized read on the per-batch path. */
+    * only the leading setting lines ([[parseSettings]]), never the
+    * data list. */
   def settings(fs: FileSystem, root: Path,
                version: Option[Int] = None): Settings = {
     val p = version match {
@@ -169,7 +168,7 @@ private[graft] object Snapshots {
 
   /** Data list + settings from ONE newest-manifest resolution — for
     * readers that need both to agree ([[Compaction.compact]]'s
-    * graduation target, `Sinks.readKeyedFor`'s bucket prune: two
+    * graduation target, a keyed table's head in `Sinks`: two
     * resolutions could straddle a rebucket commit and prune the new
     * layout with the old count). */
   def currentFilesAndSettings(fs: FileSystem, root: Path)
@@ -212,11 +211,13 @@ private[graft] object Snapshots {
     * whose value is outside `keep` BEFORE Spark lists anything — the
     * snapshot twin of partition-directory pruning (an empty pruned
     * list falls back to the full snapshot; the caller's value filter
-    * still drops the rows). Falls back to a raw directory read for
-    * tables without a snapshot (foreign/legacy layouts). ONE
-    * definition shared by the vector index's cell-pruned codes scan
-    * and the text index's bucket-pruned postings scan — the serving
-    * read path must not fork per index. */
+    * still drops the rows). A directory with no manifest is refused
+    * loudly: every writer commits its table's first version together
+    * with its first data, so only an older version's layout or a
+    * crashed build lacks one — a raw read would serve it unchecked.
+    * ONE definition shared by the vector index's cell-pruned codes
+    * scan and the text index's bucket-pruned postings scan — the
+    * serving read path must not fork per index. */
   def readTable(spark: org.apache.spark.sql.SparkSession, root: Path,
                 pruneDirs: Option[(String, Set[Long])] = None)
       : org.apache.spark.sql.DataFrame = {
@@ -301,7 +302,10 @@ private[graft] object Snapshots {
         val read = if (keep.nonEmpty) keep else files
         spark.read.option("basePath", root.toString)
           .parquet(read.map(p => new Path(root, p).toString): _*)
-      case _ => spark.read.parquet(root.toString)
+      case _ => throw new IllegalArgumentException(
+        s"$root has no snapshot manifest — not a table this version " +
+          "committed (a keyed table an older version wrote adopts the " +
+          "current format through Sinks.upgrade)")
     }
   }
 

@@ -311,9 +311,8 @@ object VectorIndexApp {
     * `cells` additionally prunes the file list to the probed cell
     * directories before Spark ever lists anything (the snapshot twin
     * of the partition-directory pruning the raw path gets from the
-    * `cluster` filter). Falls back to the raw directory read for
-    * tables without a snapshot (never written by this app, which
-    * commits v1 at build — but a foreign/legacy layout still reads). */
+    * `cluster` filter). The build commits v1, so a codes dir with no
+    * manifest is a crashed build's and is refused like any other. */
   private[apps] def codesFrame(spark: SparkSession, indexDir: String,
                                cells: Option[Set[Long]] = None,
                                version: Option[Int] = None): DataFrame = {

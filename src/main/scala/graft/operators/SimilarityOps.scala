@@ -125,10 +125,12 @@ object SimilarityOps {
     * window-count + self-join form, which cost a sort for the window,
     * re-computed the whole upstream signature pipeline once per join
     * side, and exchanged the bucket rows twice (§2.4 "remove shuffles
-    * outright"). `collect_list` per bucket is bounded by `maxBucket`
-    * (the d3-documented flood cap), so the per-row array tops out at
-    * maxBucket ids — the same quadratic bound the join form admitted,
-    * now explicit. Same bucket semantics, same cap, same pair set. */
+    * outright"). `collect_list` gathers each WHOLE bucket before the
+    * `maxBucket` cap (the d3-documented flood cap) filters it, so the
+    * cap bounds the emitted pairs — the same quadratic bound the join
+    * form admitted — but not the buffer: a degenerate bucket key still
+    * builds one unspillable array of unbounded size (a known defect,
+    * still open). Same bucket semantics, same cap, same pair set. */
   def pairsWithinBuckets(bands: DataFrame, keys: Seq[String],
                          maxBucket: Int = 1000): DataFrame = {
     bands.groupBy(keys.map(col): _*)

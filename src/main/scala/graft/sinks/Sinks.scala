@@ -108,90 +108,140 @@ object Sinks {
                   dropCols: Seq[String] = Nil,
                   nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path, Some(nBuckets)) { n =>
-      upsertKeyedBody(spark, fs, incoming, keys, order, path, dropCols, n)
+    locked(fs, path, Some(nBuckets)) { (n, files) =>
+      upsertKeyedBody(spark, fs, incoming, keys, order, path, dropCols, n,
+        files)
     }
   }
 
   private def upsertKeyedBody(spark: SparkSession, fs: FileSystem,
                               incoming: DataFrame, keys: Seq[String],
                               order: Seq[String], path: String,
-                              dropCols: Seq[String], n: Int): Unit = {
+                              dropCols: Seq[String], n: Int,
+                              files: Seq[String]): Unit = {
     val withB = incoming.withColumn("__bucket", bucketOf(keys, n))
     val touched = withB.select("__bucket").distinct()
       .collect().map(_.getInt(0)).sorted // ≤ n values, driver-safe
     if (touched.isEmpty) return
-    val merged = liveTouched(spark, fs, path, touched.toIndexedSeq) match {
+    val merged = touchedFiles(spark, path, files, touched.toIndexedSeq) match {
       case Some(cur) => cur.unionByName(withB, allowMissingColumns = true)
       case None => withB
     }
     val deduped = DedupOps.keepLast(merged, keys.map(col), order.map(col))
       .drop(dropCols: _*)
-    stageAndInstall(spark, fs, path, deduped, touched.toIndexedSeq,
+    stageAndInstall(spark, fs, path, files, deduped, touched.toIndexedSeq,
       Snapshots.Settings(Some(n)))
   }
 
-  /** Run a keyed-table mutation under the table's single-writer lock
-    * (the [[Snapshots]] contract — a second concurrent writer must fail
-    * loudly, not interleave pending journals and manifest versions),
-    * after healing any torn previous write: staged-install first (its
-    * journaled files must be all-present-or-none before the snapshot
-    * heal can adjudicate the pending journal), then the journal. A
-    * table without a manifest — a new table, or a raw bucket layout
-    * written by an older version — is adopted by one bootstrap commit
-    * that lists its current files as version 1 and records its bucket
-    * count: the one the older version recorded, else the writer's
-    * `nBuckets`. `body` gets the table's recorded count (`nBuckets`,
-    * else the default, while the table holds no data): mutations hash
-    * with it, never with a caller's differing `nBuckets`, which would
-    * put a key in a second bucket and duplicate it. */
+  /** Run `body` under the table's single-writer lock (the [[Snapshots]]
+    * contract — a second concurrent writer must fail loudly, not
+    * interleave pending journals and manifest versions), after healing
+    * any torn previous write: staged-install first (its journaled files
+    * must be all-present-or-none before the snapshot heal can
+    * adjudicate the pending journal), then the journal. */
+  private def healedUnderLock(fs: FileSystem, path: String)
+                             (body: => Unit): Unit =
+    StagedCommit.withWriterLock(fs, new Path(path)) {
+      StagedCommit.heal(fs, new Path(path + ".staging"))
+      Snapshots.heal(fs, new Path(path))
+      body
+    }
+
+  /** Run a keyed-table mutation [[healedUnderLock]]. `body` gets the
+    * table's head ([[keyedHead]], resolved ONCE; the lock keeps it
+    * fixed until the body's one commit): its recorded bucket count —
+    * mutations hash with it, never with a caller's differing
+    * `nBuckets`, which would put a key in a second bucket and
+    * duplicate it — and its data files. A table with no manifest and
+    * no data is bootstrapped by a version-1 commit recording the
+    * writer's `nBuckets`; a mutation that brings no count has nothing
+    * to change there and skips `body`. */
   private def locked(fs: FileSystem, path: String,
                      nBuckets: Option[Int] = None)
-                    (body: Int => Unit): Unit = {
+                    (body: (Int, Seq[String]) => Unit): Unit =
+    healedUnderLock(fs, path) {
+      keyedHead(fs, path).orElse(nBuckets.map { n =>
+        Snapshots.commit(fs, new Path(path),
+          settings = Snapshots.Settings(Some(n)))
+        (n, Nil)
+      }).foreach { case (n, files) => body(n, files) }
+    }
+
+  /** The head of keyed table `path`: its recorded bucket count and data
+    * files from ONE manifest resolution (two could straddle a rebucket
+    * commit and prune the new layout with the old count), or None while
+    * the table holds neither a manifest nor data. A keyed table has one
+    * on-disk format — a manifest whose head records `nbuckets`. A raw
+    * bucket layout or a head with no count (both written only by older
+    * versions) is refused loudly, before anything changes, naming the
+    * one-time fix: [[upgrade]]. Hashing its keys with a guessed count
+    * would prune and merge the wrong buckets. */
+  private def keyedHead(fs: FileSystem,
+                        path: String): Option[(Int, Seq[String])] = {
     val root = new Path(path)
-    StagedCommit.withWriterLock(fs, root) {
-      StagedCommit.heal(fs, new Path(path + ".staging"))
-      Snapshots.heal(fs, root)
-      if (Snapshots.currentVersion(fs, root).isEmpty) {
-        adoptLegacyOld(fs, path)
-        Snapshots.commit(fs, root, settings = Snapshots.Settings(
-          recordedBucketCount(fs, path, None).orElse(nBuckets))); ()
+    Snapshots.currentFilesAndSettings(fs, root) match {
+      case Some((files, Snapshots.Settings(Some(n), _, _))) => Some((n, files))
+      case head =>
+        require(head.isEmpty && !Compaction.holdsData(fs, root),
+          s"$path is not a snapshot-managed keyed table of this version " +
+            "(a raw bucket layout, or a manifest that records no bucket " +
+            "count — both written only by older versions). Run " +
+            s"Sinks.upgrade(spark, \"$path\") once; nothing was changed.")
+        None
+    }
+  }
+
+  /** Adopt a keyed table an older version wrote into the current
+    * on-disk format, in place: the one-time step every other keyed call
+    * refuses to take implicitly ([[keyedHead]]). Under the writer lock
+    * it heals any torn write, then settles `<table>.old`, the aside dir
+    * of an older version's raw bucket swap (move live aside → promote
+    * staged → drop aside): a `__bucket=N` aside whose live dir is
+    * missing is the last copy of that bucket — restore it; one whose
+    * live dir exists is stale — drop it. Hadoop reports a failed rename
+    * by returning false, and the delete after it would then destroy
+    * the last copy, so the restore is checked. Then it commits the
+    * count of the `<table>.nbuckets` sidecar into the head (a raw
+    * table's files become its first version) and deletes the sidecar.
+    * Idempotent: a current-format table is left as it is. A crashed
+    * batch of the older version may have merged some buckets only; its
+    * replay after the upgrade is still exact, because
+    * [[upsertCombine]]'s replay stamp is checked per bucket. */
+  def upgrade(spark: SparkSession, path: String): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return
+    healedUnderLock(fs, path) {
+      val old = new Path(path + ".old")
+      if (fs.exists(old)) {
+        fs.listStatus(old).foreach { st =>
+          val live = new Path(path, st.getPath.getName)
+          if (fs.exists(live)) fs.delete(st.getPath, true)
+          else if (!fs.rename(st.getPath, live))
+            throw new java.io.IOException(s"restore ${st.getPath} failed for $live")
+        }
+        fs.delete(old, true)
       }
-      body(recordedBucketCount(fs, path, Snapshots.settings(fs, root).nbuckets)
-        .orElse(nBuckets).getOrElse(DefaultUpsertBuckets))
+      val sidecar = new Path(path + ".nbuckets")
+      if (Snapshots.settings(fs, root).nbuckets.isEmpty &&
+        (Snapshots.currentVersion(fs, root).isDefined ||
+          Compaction.holdsData(fs, root))) {
+        require(fs.exists(sidecar), s"$path records no bucket count (no " +
+          "manifest `nbuckets` line, no sidecar), so its layout is " +
+          "unknown — rebuild the table")
+        val in = fs.open(sidecar)
+        val n = try scala.io.Source.fromInputStream(in).mkString.trim.toInt
+          finally in.close()
+        Snapshots.commit(fs, root, settings = Snapshots.Settings(Some(n)))
+      }
+      fs.delete(sidecar, false)
     }
   }
-
-  /** Settle `<table>.old`, the aside dir of an older version's raw
-    * bucket swap (move live aside → promote staged → drop aside), before
-    * the bootstrap commit lists the table: a `__bucket=N` aside whose
-    * live dir is missing is the last copy of that bucket — restore it;
-    * one whose live dir exists is stale — drop it. The emptied dir
-    * (which those swaps never removed) goes too. Hadoop reports a
-    * failed rename by returning false, and the delete after it would
-    * then destroy the last copy, so the restore is checked. */
-  private def adoptLegacyOld(fs: FileSystem, path: String): Unit = {
-    val old = new Path(path + ".old")
-    if (!fs.exists(old)) return
-    fs.listStatus(old).foreach { st =>
-      val live = new Path(path, st.getPath.getName)
-      if (fs.exists(live)) fs.delete(st.getPath, true)
-      else if (!fs.rename(st.getPath, live))
-        throw new java.io.IOException(s"restore ${st.getPath} failed for $live")
-    }
-    fs.delete(old, true)
-  }
-
-  /** The current rows of `path`'s touched buckets, read through the
-    * manifest — never the raw directories, which may also hold the
-    * previous commits' retired (grace-window) files. */
-  private def liveTouched(spark: SparkSession, fs: FileSystem, path: String,
-                          touched: Seq[Int]): Option[DataFrame] =
-    touchedFiles(spark, path,
-      Snapshots.currentFiles(fs, new Path(path)).getOrElse(Nil), touched)
 
   /** The rows of `files` (a manifest's data list) in the `touched`
-    * buckets, or None when they hold none. */
+    * buckets, or None when they hold none — never the raw directories,
+    * which may also hold the previous commits' retired (grace-window)
+    * files. */
   private def touchedFiles(spark: SparkSession, path: String,
                            files: Seq[String],
                            touched: Seq[Int]): Option[DataFrame] = {
@@ -221,10 +271,10 @@ object Sinks {
     * the journal and the commit — the bucket count `df` was hashed
     * with, plus a rebucket's graduation target — so a rebucket's
     * count, target and layout flip atomically in the crash-heal path
-    * too, and a table an older version wrote records its count. */
+    * too. `files` is the head's data list from [[locked]]. */
   private def stageAndInstall(spark: SparkSession, fs: FileSystem,
-                              path: String, df: DataFrame,
-                              buckets: Seq[Int],
+                              path: String, files: Seq[String],
+                              df: DataFrame, buckets: Seq[Int],
                               settings: Snapshots.Settings): Unit = {
     val root = new Path(path)
     val staging = new Path(path + ".staging")
@@ -232,8 +282,7 @@ object Sinks {
       .parquet(staging.toString)
     val names = buckets.map(b => s"__bucket=$b")
     val nameSet = names.toSet
-    val replaced = Snapshots.currentFiles(fs, root).getOrElse(Nil)
-      .filter(f => nameSet.contains(f.takeWhile(_ != '/')))
+    val replaced = files.filter(f => nameSet.contains(f.takeWhile(_ != '/')))
     val moves = names.flatMap { n =>
       Compaction.visibleFiles(fs, new Path(staging, n)).map { st =>
         (s"$n/${st.getPath.getName}",
@@ -267,23 +316,25 @@ object Sinks {
     * leaves every touched bucket either merged (stamped, skipped on
     * replay) or untouched (re-merged), and the replay converges with
     * no double count. The check is per bucket, so it also holds for a
-    * legacy raw table adopted after a crash that left some of its
-    * buckets merged. Callers must pass the streaming micro-batch id
+    * table [[upgrade]] adopted after an older version's crash left some
+    * of its buckets merged. Callers must pass the streaming micro-batch id
     * (monotone per checkpoint; a replayed batch reuses its id with
     * identical content — the foreachBatch contract). */
   def upsertCombine(spark: SparkSession, delta: DataFrame, keys: Seq[String],
                     combine: Seq[Column], batchId: Long, path: String,
                     nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path, Some(nBuckets)) { n =>
-      upsertCombineBody(spark, fs, delta, keys, combine, batchId, path, n)
+    locked(fs, path, Some(nBuckets)) { (n, files) =>
+      upsertCombineBody(spark, fs, delta, keys, combine, batchId, path, n,
+        files)
     }
   }
 
   private def upsertCombineBody(spark: SparkSession, fs: FileSystem,
                                 delta: DataFrame, keys: Seq[String],
                                 combine: Seq[Column], batchId: Long,
-                                path: String, n: Int): Unit = {
+                                path: String, n: Int,
+                                files: Seq[String]): Unit = {
     val withB = delta
       .withColumn("__bucket", bucketOf(keys, n))
       .withColumn("__mart_batch", lit(batchId))
@@ -291,7 +342,7 @@ object Sinks {
       .collect().map(_.getInt(0)).sorted // ≤ n values, driver-safe
     if (touched.isEmpty) return
     val (skip, current) =
-      liveTouched(spark, fs, path, touched.toIndexedSeq) match {
+      touchedFiles(spark, path, files, touched.toIndexedSeq) match {
         case Some(live) =>
           // buckets stamped with this batch id OR LATER are fully merged
           // (stamps apply in strictly increasing order per table, and the
@@ -317,7 +368,7 @@ object Sinks {
       .groupBy((keys :+ "__bucket").map(col): _*)
       .agg(combine.head, combine.tail :+
         max(col("__mart_batch")).as("__mart_batch"): _*)
-    stageAndInstall(spark, fs, path, combined, todo.toIndexedSeq,
+    stageAndInstall(spark, fs, path, files, combined, todo.toIndexedSeq,
       Snapshots.Settings(Some(n)))
   }
 
@@ -325,8 +376,7 @@ object Sinks {
     * replay-stamp columns, through its newest manifest (file list
     * pinned at PLAN time — a writer committing mid-query cannot tear
     * the read or delete a referenced file inside the grace window). A
-    * legacy raw table not yet adopted by a write reads its
-    * directories. */
+    * directory with no manifest is refused ([[Snapshots.readTable]]). */
   def readCombined(spark: SparkSession, path: String): DataFrame =
     Snapshots.readTable(spark, new Path(path))
       .drop("__bucket", "__mart_batch")
@@ -366,13 +416,13 @@ object Sinks {
                   predicate: Column): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path) { n =>
+    locked(fs, path) { (n, files) =>
       val hit = coalesce(predicate, lit(false))
       val affected = Snapshots.readTable(spark, new Path(path)).filter(hit)
         .select("__bucket").distinct().collect().map(_.getInt(0)).sorted
       if (affected.nonEmpty)
-        liveTouched(spark, fs, path, affected.toIndexedSeq).foreach { live =>
-          stageAndInstall(spark, fs, path, live.filter(!hit),
+        touchedFiles(spark, path, files, affected.toIndexedSeq).foreach { live =>
+          stageAndInstall(spark, fs, path, files, live.filter(!hit),
             affected.toIndexedSeq, Snapshots.Settings(Some(n)))
         }
     }
@@ -396,7 +446,7 @@ object Sinks {
                    keys: Seq[String], combine: Seq[Column]): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path) { n =>
+    locked(fs, path) { (n, files) =>
       val table = Snapshots.readTable(spark, new Path(path))
       val hit = coalesce(predicate, lit(false))
       val srcBuckets = table.filter(hit)
@@ -413,12 +463,12 @@ object Sinks {
         val dstBuckets = moved
           .select("__bucket").distinct().collect().map(_.getInt(0))
         val touched = (srcBuckets ++ dstBuckets).distinct.sorted.toIndexedSeq
-        val kept = liveTouched(spark, fs, path, touched)
+        val kept = touchedFiles(spark, path, files, touched)
           .map(_.filter(!hit)).getOrElse(moved.limit(0))
         val merged = kept.unionByName(moved, allowMissingColumns = true)
           .groupBy((keys :+ "__bucket").map(col): _*)
           .agg(combine.head, combine.tail: _*)
-        stageAndInstall(spark, fs, path, merged, touched,
+        stageAndInstall(spark, fs, path, files, merged, touched,
           Snapshots.Settings(Some(n)))
       }
     }
@@ -450,33 +500,23 @@ object Sinks {
     *    old-everything or new-everything (the pending journal carries
     *    the count, so even the heal's commit flips both together).
     *
-    * REQUIRES a snapshot-managed table, refusing a legacy raw layout
-    * (written by an older version, before the snapshot manifest was
-    * the only protocol) loudly: a raw table's crash contract was
-    * per-bucket replay (a crashed batch left some buckets
-    * merged-and-stamped and others not) — re-hashing would mix stamped
-    * and unstamped keys into one NEW bucket, whose stamp would then
-    * mask the unmerged keys' delta on replay, losing it silently.
-    * Replay any in-flight batch, let one ordinary write adopt the table
-    * (its mutations are table-atomic, so the mixed state cannot recur),
-    * then rebucket. Keys are needed to re-hash: pass the table's key
-    * columns. */
+    * Like every keyed call, it refuses a table an older version wrote
+    * ([[keyedHead]]). Such a table's crash contract was per-bucket replay (a
+    * crashed batch left some buckets merged-and-stamped and others
+    * not), and re-hashing would mix stamped and unstamped keys into one
+    * NEW bucket, whose stamp would then mask the unmerged keys' delta
+    * on replay, losing it silently: [[upgrade]] it, replay any
+    * in-flight batch (its mutations are table-atomic from then on, so
+    * the mixed state cannot recur), then rebucket. Keys are needed to
+    * re-hash: pass the table's key columns. */
   def rebucket(spark: SparkSession, path: String, keys: Seq[String],
                newN: Int, targetBytes: Option[Long] = None): Unit = {
     require(newN > 0, s"bucket count must be positive (got $newN)")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    require(Snapshots.currentFiles(fs, new Path(path)).isDefined,
-      s"rebucket requires a snapshot-managed table; $path is a raw " +
-        "bucket layout whose crashed batches replay PER BUCKET — " +
-        "re-hashing could merge a replayed bucket's stamp over an " +
-        "unreplayed key's delta. Replay any in-flight batch, write " +
-        "once to upgrade, then rebucket.")
-    locked(fs, path) { oldN =>
+    locked(fs, path) { (oldN, curFiles) =>
       if (oldN != newN) {
         val settings = Snapshots.Settings(Some(newN), targetBytes = targetBytes)
-        val curFiles = Snapshots.currentFiles(fs, new Path(path))
-          .getOrElse(Nil)
         if (curFiles.isEmpty) {
           // nothing to move — the count flip is a bare commit
           Snapshots.commit(fs, new Path(path), settings = settings); ()
@@ -496,7 +536,7 @@ object Sinks {
           // enumerating 0 until newN is driver-side metadata, where
           // collecting the ACTUAL new ids would re-run the full table
           // rehash once just to learn them
-          stageAndInstall(spark, fs, path, restaged,
+          stageAndInstall(spark, fs, path, curFiles, restaged,
             (oldBuckets ++ (0 until newN)).distinct.sorted.toIndexedSeq,
             settings)
         }
@@ -521,15 +561,12 @@ object Sinks {
     // an explicit setter must not silently no-op on a typo'd path or a
     // set-before-first-write ordering — the table would keep the
     // global default with no signal
-    require(fs.exists(new Path(path)),
-      s"setCompactionTarget: $path does not exist")
-    require(Snapshots.currentFiles(fs, new Path(path)).isDefined,
-      s"setCompactionTarget requires a snapshot-managed table; $path " +
-        "has no manifest to carry the setting — write once to " +
-        "upgrade first.")
-    locked(fs, path) { _ =>
+    require(Snapshots.currentVersion(fs, new Path(path)).isDefined,
+      s"setCompactionTarget: $path has no snapshot manifest to carry " +
+        "the setting")
+    healedUnderLock(fs, path) {
       Snapshots.commit(fs, new Path(path),
-        settings = Snapshots.Settings(targetBytes = Some(bytes))); ()
+        settings = Snapshots.Settings(targetBytes = Some(bytes)))
     }
   }
 
@@ -600,10 +637,9 @@ object Sinks {
       s"target rows per bucket must be positive (got $targetRowsPerBucket)")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Snapshots.currentFiles(fs, root).getOrElse {
+    val files = keyedHead(fs, path).map(_._2).getOrElse {
       throw new IllegalArgumentException(
-        s"recommendedBuckets requires a snapshot-managed table; $path " +
-          "has no manifest naming its data files")
+        s"recommendedBuckets: $path holds no table yet")
     }
     // the manifest read above is UNLOCKED (this is a read-only advisory
     // API): a concurrent commit can delete a just-expired file in the
@@ -637,18 +673,15 @@ object Sinks {
     * [[WidenFactor]]. Never NARROWS: a narrow recommendation can be a
     * transient (retention just swept; a probe table mid-load), and
     * shrinking is a deliberate operator action with [[rebucket]].
-    * Returns the new count when it widened, None otherwise (missing
-    * table, raw layout, or within hysteresis). Callers bound the work
+    * Returns the new count when it widened, None otherwise (a table
+    * with no data yet, or within hysteresis). Callers bound the work
     * per cycle — the mart widens at most ONE table per sweep. */
   def autoWiden(spark: SparkSession, path: String, keys: Seq[String],
                 targetBytesPerBucket: Long = DefaultBucketTargetBytes,
                 targetRowsPerBucket: Long = DefaultBucketTargetRows)
       : Option[Int] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (Snapshots.currentVersion(fs, root).isEmpty) return None
-    val cur = recordedBucketCount(fs, path,
-      Snapshots.settings(fs, root).nbuckets).getOrElse(return None)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = keyedHead(fs, path).map(_._1).getOrElse(return None)
     val rec = recommendedBuckets(spark, path, targetBytesPerBucket,
       targetRowsPerBucket)
     if (rec >= cur * WidenFactor) {
@@ -667,58 +700,17 @@ object Sinks {
     * join/filter exactly; this is the pruning step that keeps a
     * per-batch state lookup O(touched buckets), never O(table)).
     * `forKeys` must be a small frame (its distinct buckets are
-    * collected — ≤ nBuckets values). A legacy raw table not yet
-    * adopted by a write reads its touched bucket dirs: it has no
-    * retired files, so the dirs hold exactly its rows. */
+    * collected — ≤ nBuckets values). None while the table holds no
+    * data; a table an older version wrote is refused ([[keyedHead]]). */
   def readKeyedFor(spark: SparkSession, path: String,
                    forKeys: DataFrame, keys: Seq[String]): Option[DataFrame] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    // ONE manifest resolution for the count and the file list, so the
-    // prune never hashes with one layout's count into another's files
-    val snap = Snapshots.currentFilesAndSettings(fs, root)
-    val n = recordedBucketCount(fs, path, snap.flatMap(_._2.nbuckets))
-      .getOrElse(return None)
-    val touched = forKeys.select(bucketOf(keys, n).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val live = snap match {
-      case Some((files, _)) => touchedFiles(spark, path, files, touched)
-      case None =>
-        val dirs = touched.map(b => new Path(root, s"__bucket=$b"))
-          .filter(fs.exists).map(_.toString)
-        if (dirs.isEmpty) None
-        else Some(spark.read.option("basePath", path).parquet(dirs: _*))
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    keyedHead(fs, path).flatMap { case (n, files) =>
+      val touched = forKeys.select(bucketOf(keys, n).as("__b"))
+        .distinct().collect().map(_.getInt(0)).toIndexedSeq
+      touchedFiles(spark, path, files, touched).map(_.drop("__bucket"))
     }
-    live.map(_.drop("__bucket"))
   }
-
-  /** The bucket count `path` was written with: `manifest` (its head
-    * manifest's `nbuckets` line), else the `<table>.nbuckets` sidecar
-    * that older versions kept beside the table. Nothing writes the
-    * sidecar any more; it serves the tables whose manifests lack the
-    * line — a legacy raw table at its adoption, a table an older
-    * version wrote — and each records its count at its next commit.
-    * None for a table with no data yet. A table that holds data but
-    * records no count fails loudly: hashing its keys with a guessed
-    * count would prune and merge the wrong buckets. */
-  private def recordedBucketCount(fs: FileSystem, path: String,
-                                  manifest: Option[Int]): Option[Int] =
-    manifest.orElse {
-      val sidecar = new Path(path + ".nbuckets")
-      if (fs.exists(sidecar)) {
-        val in = fs.open(sidecar)
-        try Some(scala.io.Source.fromInputStream(in).mkString.trim.toInt)
-        finally in.close()
-      } else {
-        val root = new Path(path)
-        require(Compaction.partitionDirs(fs, root)
-          .forall(Compaction.visibleFiles(fs, _).isEmpty),
-          s"$path holds data but records no bucket count (no manifest " +
-            "`nbuckets` line, no .nbuckets sidecar)")
-        None
-      }
-    }
 
   /** K7 — debug sink. */
   def debug(df: DataFrame, n: Int = 20): Unit = df.show(n, truncate = false)

@@ -9,8 +9,9 @@ import graft.sinks.Sinks
 
 /** Fixtures for keyed tables as older versions left them on disk: the
   * raw bucket layout, with no snapshot manifest. No writer produces
-  * one any more, so specs of the legacy refusals and of the in-place
-  * upgrade build it directly. */
+  * one any more, and every keyed call refuses one, so the specs build
+  * it directly to feed [[Sinks.upgrade]], the one step that adopts it,
+  * and to pin the refusals. */
 object LegacyTables {
 
   /** Write `df` (keyed by `k`) as an [[Sinks.upsertCombine]] table of an

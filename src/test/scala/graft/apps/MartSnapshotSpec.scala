@@ -151,7 +151,9 @@ class MartSnapshotSpec extends SparkSpec {
     // legacy (raw bucket swap) table, as an older version left it
     LegacyTables.writeRawCombined(delta(0 until 20, 1), dir, nBuckets = 8)
     assert(Snapshots.currentFiles(fs, new Path(dir)).isEmpty, "still raw")
-    // first write: bootstrap manifest + normal merge
+    // the one-time upgrade commits the bootstrap manifest; then a
+    // normal merge
+    Sinks.upgrade(spark, dir)
     combineInto(delta(0 until 20, 10), dir, 1L)
     assert(Snapshots.currentFiles(fs, new Path(dir)).nonEmpty)
     assert(rows(Sinks.readCombined(spark, dir)) ==
@@ -167,15 +169,17 @@ class MartSnapshotSpec extends SparkSpec {
   test("a raw table reads by bucket, and adoption heals a crashed bucket swap") {
     val dir = Files.createTempDirectory("mart-snap-old").toString + "/t"
     LegacyTables.writeRawCombined(delta(0 until 20, 1), dir, nBuckets = 8)
-    // the per-batch state lookup reads a not-yet-adopted table's dirs
-    val probe = Seq(3L).toDF("k")
-    assert(rows(Sinks.readKeyedFor(spark, dir, probe, Seq("k")).get
-      .filter(col("k") === 3L).select("k", "n")) == Map(3L -> 1L))
     // an older version crashed between moving k=3's bucket aside and
     // promoting its replacement: the aside copy is the only one
     val b = graft.functions.StableHash.stable60Local("3") % 8
     val aside = new Path(dir + ".old", s"__bucket=$b")
     assert(fs.rename(new Path(dir, s"__bucket=$b"), aside))
+    // the upgrade restores the aside bucket; the per-batch state
+    // lookup then reads it by bucket
+    Sinks.upgrade(spark, dir)
+    val probe = Seq(3L).toDF("k")
+    assert(rows(Sinks.readKeyedFor(spark, dir, probe, Seq("k")).get
+      .filter(col("k") === 3L).select("k", "n")) == Map(3L -> 1L))
     combineInto(delta(0 until 20, 10), dir, 1L)
     assert(rows(Sinks.readCombined(spark, dir)) ==
       (0 until 20).map(k => k.toLong -> 11L).toMap)

@@ -150,8 +150,9 @@ class RebucketSpec extends SparkSpec {
       Sinks.rebucket(spark, dir, Seq("k"), newN = 8)
     }
     assert(e.getMessage.contains("snapshot-managed"), e.getMessage)
-    // the documented path works: one write upgrades, then
-    // the rebucket applies
+    // the documented path works: upgrade, replay, then the rebucket
+    // applies
+    Sinks.upgrade(spark, dir)
     combineInto(dir, 0 until 16, 10, 1)
     Sinks.rebucket(spark, dir, Seq("k"), newN = 8)
     assert(Snapshots.settings(fs, new Path(dir)).nbuckets == Some(8))
@@ -274,6 +275,8 @@ class RebucketSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Sinks.recommendedBuckets(spark, raw)
     }
+    Sinks.upgrade(spark, raw)
+    assert(Sinks.recommendedBuckets(spark, raw) == 1)
     // and the recommendation is the principled rebucket input
     val rec = Sinks.recommendedBuckets(spark, dir,
       math.max(1L, totalBytes / 4))
