@@ -25,25 +25,26 @@ import org.apache.spark.sql.functions._
   *    each index's in-file ordering contract (vec_id for codes, sig for
   *    bands, fp for fps, doc_id for shingles), so parquet row-group
   *    min/max skipping survives compaction;
-  *  - COMMIT: the swap goes through [[StagedCommit.publishOps]] — the
-  *    manifest freezes `Del` ops for every replaced file and a `Move`
-  *    for each merged file, deletions run strictly before installs, so
-  *    no crash window ever shows a row TWICE (rows are dark at worst,
-  *    alive in the staged merged file the manifest froze), and the
-  *    existing heal-first discipline repairs a torn compaction before
-  *    the next append reads anything. Pure file merge: the row multiset
-  *    is untouched, so every query result is byte-identical before and
+  *  - COMMIT: the swap goes through ONE [[StagedCommit.publishOps]]
+  *    manifest — a `Move` per merged file, plus a `Del` per replaced
+  *    file of a raw group (deletions run strictly before installs, so
+  *    no crash window ever shows a row TWICE) or, last, one snapshot
+  *    commit per [[Snapshots]] table that retires them; the existing
+  *    heal-first discipline repairs a torn compaction before the next
+  *    append reads anything. Pure file merge: the row multiset is
+  *    untouched, so every query result is byte-identical before and
   *    after (spec-asserted).
   *
-  * CONCURRENT READERS: the writer lock excludes other WRITERS only. A
-  * query that plans its scan while a compaction commit is in flight
-  * can reference a just-deleted small file (task fails loudly with
+  * CONCURRENT READERS of a RAW group (a snapshot group's readers plan
+  * against its manifest and keep their files for the grace window):
+  * the writer lock excludes other WRITERS only. A query that plans its
+  * scan while a compaction commit is in flight can reference a
+  * just-deleted small file (task fails loudly with
   * FileNotFoundException — retry the query) or list between the Del
   * and Move phases and see the compacting directories' rows dark for
   * that one read. This is the same window [[SurgicalRewrite]]'s
   * aside-swap has always had, inherent to in-place file replacement
-  * on a raw directory layout (a snapshot/manifest layer à la Iceberg
-  * is what removes it, at the cost of a whole metadata tier). Serve
+  * on a raw directory layout. Serve raw-group
   * queries from a replica or schedule compaction-bearing appends in
   * maintenance windows when read-your-exact-files matters; do NOT
   * paper over it with `spark.sql.files.ignoreMissingFiles`, which
@@ -85,8 +86,8 @@ object Compaction {
     * [[Snapshots]]-managed table rooted there: the merge installs its
     * files WITHOUT deleting the replaced originals (readers that
     * planned against the current snapshot keep every file they
-    * resolved), and the post-publish snapshot commit retires the
-    * originals, deleting them one commit LATER — closing the
+    * resolved), and the manifest's snapshot commit retires the
+    * originals, deleting them two commits LATER — closing the
     * concurrent-reader window documented in the header for raw
     * tables. */
   final case class Group(dirs: Seq[Path], order: Seq[Column],
@@ -129,7 +130,10 @@ object Compaction {
     * Graduated files (≥ `targetBytes`) are never read or rewritten.
     * Returns the number of directories compacted. `staging` must be
     * the index's own `_staging` path so the existing heal-first
-    * discipline covers a torn compaction. */
+    * discipline covers a torn compaction. A snapshot group whose table
+    * has no manifest (an older version's layout or a crashed build —
+    * index builds commit version 1 with their data) is refused before
+    * anything changes. */
   def compact(spark: SparkSession, fs: FileSystem, staging: Path,
               groups: Seq[Group],
               maxFiles: Int = DefaultMaxFiles,
@@ -142,11 +146,16 @@ object Compaction {
     // the heal would freeze the torn directory state. The app append
     // paths heal before calling this, so the common case is a no-op.
     StagedCommit.heal(fs, staging)
-    // then resolve any crashed snapshot commit (its merged files are
-    // installed by the manifest heal above, or never were) — BEFORE
-    // the freeze below, so a healed commit's retired files are already
-    // excluded from the snapshot the freeze consults
-    groups.flatMap(_.snapshotRoot).distinct.foreach(Snapshots.heal(fs, _))
+    // one head per snapshot table, resolved after the heal: the freeze
+    // reads its data list and graduation target, its commit op the
+    // version after it
+    val heads: Map[Path, Snapshots.Manifest] =
+      groups.flatMap(_.snapshotRoot).distinct.map { root =>
+        root -> Snapshots.head(fs, root).getOrElse(throw
+          new IllegalArgumentException(s"compaction of $root refused: it " +
+            "has no snapshot manifest, so it is not a table this version " +
+            "committed; nothing was changed"))
+      }.toMap
     // FREEZE the per-directory file lists: the manifest's delete set
     // must be exactly the files the merge job read, no more. For a
     // snapshot-managed group only the CURRENT SNAPSHOT's data files
@@ -154,19 +163,16 @@ object Compaction {
     // merge, alive only for its readers' grace window) merged again
     // would put its rows in the table twice.
     val frozen: Seq[(Group, Seq[(Path, Seq[Path])])] = groups.map { g =>
-      // one newest-manifest resolution yields BOTH the data list and
-      // the per-table graduation override
-      val snapInfo: Option[(Seq[String], Snapshots.Settings)] =
-        g.snapshotRoot.flatMap(Snapshots.currentFilesAndSettings(fs, _))
-      val inData: Path => Boolean = (g.snapshotRoot, snapInfo) match {
-        case (Some(root), Some((data, _))) =>
-          val abs = data.map(p => new Path(root, p).toUri.getPath).toSet
+      val inData: Path => Boolean = g.snapshotRoot match {
+        case Some(root) =>
+          val abs = heads(root).data.map(p => new Path(root, p).toUri.getPath).toSet
           p => abs.contains(p.toUri.getPath)
-        case _ => _ => true // unadopted table: all visible is data
+        case None => _ => true // raw group: all visible is data
       }
       // per-table graduation size: the snapshot manifest's targetbytes
       // line overrides the call-site default (see DefaultTargetBytes)
-      val effTarget = snapInfo.flatMap(_._2.targetBytes).getOrElse(targetBytes)
+      val effTarget = g.snapshotRoot.flatMap(heads(_).settings.targetBytes)
+        .getOrElse(targetBytes)
       g -> g.dirs.flatMap { dir =>
         val files = visibleFiles(fs, dir)
           .filter(_.getLen < effTarget).map(_.getPath)
@@ -193,11 +199,9 @@ object Compaction {
     // exactly the original physical schema — the partition value stays
     // encoded in the directory name.
     val ops = scala.collection.mutable.ArrayBuffer[StagedCommit.Op]()
-    // per snapshot root: the originals each merge replaces and the
-    // merged files it installs (root-relative), for the pending journal
-    val snapPlan = scala.collection.mutable.Map.empty[Path,
-      (scala.collection.mutable.ArrayBuffer[String],
-        scala.collection.mutable.ArrayBuffer[String])]
+    // per snapshot root: the originals the merges replace (root-
+    // relative) and how many merged files they install, for its commit
+    var snapPlan = Map.empty[Path, (Vector[String], Int)]
     def rel(root: Path, dir: Path, name: String): String =
       if (dir.toUri.getPath == root.toUri.getPath) name
       else s"${dir.getName}/$name"
@@ -239,12 +243,10 @@ object Compaction {
           case Some(root) =>
             // snapshot mode: install WITHOUT deleting — the snapshot
             // commit below retires the originals; their physical
-            // deletion waits one more commit (the readers' grace)
-            val (repl, mrg) = snapPlan.getOrElseUpdate(root,
-              (scala.collection.mutable.ArrayBuffer.empty,
-                scala.collection.mutable.ArrayBuffer.empty))
-            repl ++= files.map(f => rel(root, dir, f.getName))
-            mrg ++= merged.map(m => rel(root, dir, m.getName))
+            // deletion waits two more commits (the readers' grace)
+            val (repl, added) = snapPlan.getOrElse(root, (Vector.empty, 0))
+            snapPlan += root -> (repl ++ files.map(f => rel(root, dir, f.getName)),
+              added + merged.length)
           case None =>
             ops ++= files.map(StagedCommit.Del(_))
         }
@@ -256,15 +258,12 @@ object Compaction {
         // compaction
       }
     }
-    // journal each snapshot table's intent BEFORE any install: a crash
-    // leaves either nothing installed (heal aborts the journal) or
-    // everything (the staged-manifest replay is all-or-nothing, and
-    // heal then finishes the snapshot commit)
-    snapPlan.foreach { case (root, (repl, mrg)) =>
-      Snapshots.writePending(fs, root, repl.toSeq, mrg.toSeq)
-    }
-    StagedCommit.publishOps(fs, staging, ops.toSeq)
-    snapPlan.keys.foreach(Snapshots.commitPending(fs, _))
+    // ONE manifest: the raw Dels, every move, and last one snapshot
+    // commit per snapshot table — the next heal rolls all of it forward
+    StagedCommit.publishOps(fs, staging, ops.toSeq ++ snapPlan.map {
+      case (root, (repl, added)) =>
+        Snapshots.snapOp(fs, root, heads(root), repl, added)
+    })
     frozen.map(_._2.length).sum
   }
 }

@@ -35,14 +35,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    of it.)
   *
   * Writers are serialized by [[StagedCommit.withWriterLock]] (the
-  * snapshot layer never writes outside it). Crash-safety: a compaction
-  * journals its intent to `_snap/pending` BEFORE installing merged
-  * files; [[heal]] at writer entry either completes the snapshot
-  * commit (merged files present — the staged-manifest heal installed
-  * them) or aborts the journal (nothing installed, table unchanged).
+  * snapshot layer never writes outside it). Crash-safety: a writer
+  * that installs files freezes its moves AND the snapshot commit
+  * listing them into ONE [[StagedCommit]] manifest ([[snapOp]]), the
+  * commit its last phase ([[replay]]); the writer-entry
+  * [[StagedCommit.heal]] discards an unfrozen one (table unchanged)
+  * or rolls a frozen one forward, commit included.
   * Every state a crash can leave is therefore one of: old snapshot +
-  * originals (correct), old snapshot + originals + unreferenced merged
-  * files (correct, orphans collected by the healed commit), or new
+  * originals (correct), old snapshot + originals + unreferenced
+  * installed files (correct, the heal's commit lists them), or new
   * snapshot (correct).
   *
   * The reference has no file-layout tier at all; the shape here is the
@@ -53,13 +54,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 private[graft] object Snapshots {
 
   private def snapDir(root: Path) = new Path(root, "_snap")
-  private def pendingPath(root: Path) = new Path(snapDir(root), "pending")
 
   /** A table's settings: the bucket count (`nbuckets`), the
     * trained-state generation (`trainedgen`) and the per-table
     * compaction graduation size (`targetbytes`); None = not set. They
-    * are the LEADING lines of every manifest (and of the pending
-    * journal), and every commit carries forward each one it does not
+    * are the LEADING lines of every manifest (and of a [[snapOp]]'s
+    * payload), and every commit carries forward each one it does not
     * set ([[orElse]]), so the manifest is the table's only record of
     * them and a setting flips atomically with the layout it
     * describes (a rebucket's count, a retrain's generation). */
@@ -78,14 +78,15 @@ private[graft] object Snapshots {
         targetBytes.map(t => s"targetbytes $t")
   }
 
-  private final case class Manifest(version: Int, settings: Settings,
-                                    data: Seq[String],
-                                    retired: Seq[String],
-                                    expiring: Seq[String])
+  /** One committed version (see the header for the file lists). */
+  final case class Manifest(version: Int, settings: Settings,
+                            data: Seq[String],
+                            retired: Seq[String],
+                            expiring: Seq[String])
 
   /** Highest committed version number under a `_snap` dir, if any —
     * THE manifest-naming convention (`v%08d`, digit-checked), in one
-    * place: [[currentManifest]] and [[settings]] both resolve the head
+    * place: [[head]] and [[settings]] both resolve the head
     * through it, so the listing convention cannot drift between
     * readers (round-14 review). */
   private def newestVersion(fs: FileSystem, dir: Path): Option[Int] = {
@@ -104,10 +105,11 @@ private[graft] object Snapshots {
   def currentVersion(fs: FileSystem, root: Path): Option[Int] =
     newestVersion(fs, snapDir(root))
 
-  /** Highest committed version under `root`, if any. A manifest
-    * written before the expiring generation simply has no `expiring`
-    * lines — its retirees get one extra commit of grace, never less. */
-  private def currentManifest(fs: FileSystem, root: Path): Option[Manifest] = {
+  /** Highest committed version under `root`, if any: data list and
+    * settings from ONE resolution (two could straddle a rebucket). A
+    * manifest written before the expiring generation simply has no
+    * `expiring` lines — its retirees get one extra commit of grace. */
+  def head(fs: FileSystem, root: Path): Option[Manifest] = {
     val dir = snapDir(root)
     newestVersion(fs, dir).map { n =>
       parseManifest(n, readLines(fs, new Path(dir, f"v$n%08d")))
@@ -122,7 +124,7 @@ private[graft] object Snapshots {
 
   private val SettingKeys = Set("nbuckets", "trainedgen", "targetbytes")
 
-  /** THE parser of setting lines (manifests and the pending journal):
+  /** THE parser of setting lines (manifests and journaled commits):
     * reads the leading lines up to the first one that is not a
     * setting, so it never reads into a file list. */
   private def parseSettings(lines: Iterator[String]): Settings =
@@ -164,16 +166,7 @@ private[graft] object Snapshots {
   /** The current data-file list (paths relative to `root`); None when
     * the table is not snapshot-managed (no committed manifest). */
   def currentFiles(fs: FileSystem, root: Path): Option[Seq[String]] =
-    currentManifest(fs, root).map(_.data)
-
-  /** Data list + settings from ONE newest-manifest resolution — for
-    * readers that need both to agree ([[Compaction.compact]]'s
-    * graduation target, a keyed table's head in `Sinks`: two
-    * resolutions could straddle a rebucket commit and prune the new
-    * layout with the old count). */
-  def currentFilesAndSettings(fs: FileSystem, root: Path)
-      : Option[(Seq[String], Settings)] =
-    currentManifest(fs, root).map(m => (m.data, m.settings))
+    head(fs, root).map(_.data)
 
   /** Commit ONLY if visible files exist that the current manifest does
     * not list — the replay / empty-batch heal path: a torn append that
@@ -190,10 +183,10 @@ private[graft] object Snapshots {
     * table (the torn append never reached its own compaction step, and
     * later appends only check THEIR touched directories). */
   def adoptUnlisted(fs: FileSystem, root: Path): Boolean =
-    currentManifest(fs, root).exists { m =>
+    head(fs, root).exists { m =>
       val listed = (m.data ++ m.retired ++ m.expiring).toSet
       val adopt = visible(fs, root).exists(f => !listed(f))
-      // enforceCeiling = false — the commitPending rationale (r14
+      // enforceCeiling = false — the [[replay]] rationale (r14
       // ADVICE): a torn append's files are ALREADY published, so
       // refusing the adoption on an over-ceiling table could only
       // wedge every subsequent append behind the refusal; adoption
@@ -222,7 +215,7 @@ private[graft] object Snapshots {
                 pruneDirs: Option[(String, Set[Long])] = None)
       : org.apache.spark.sql.DataFrame = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readManifest(spark, fs, root, currentManifest(fs, root), pruneDirs)
+    readManifest(spark, fs, root, head(fs, root), pruneDirs)
   }
 
   /** Read `root` pinned at a SPECIFIC manifest version — the member
@@ -350,15 +343,18 @@ private[graft] object Snapshots {
     * Unlisted visible files are adopted as data — which is exactly
     * right for files a torn append published before its snapshot
     * commit (the meta watermark makes the replay a no-op, so adoption
-    * here is their only way in); compaction's merged files are never
-    * unlisted at commit time because [[heal]] resolves the pending
-    * journal first. `settings` sets what it names and carries the
-    * rest forward from the current version. */
+    * here is their only way in); a journaled install's files are never
+    * unlisted at commit time because its commit rides the same
+    * [[StagedCommit]] manifest as its moves. `settings` sets what it
+    * names and carries the rest forward from the current version. An
+    * older version's crash journal is refused before anything changes
+    * ([[refuseLegacyJournal]]). */
   def commit(fs: FileSystem, root: Path,
              replaced: Seq[String] = Nil,
              settings: Settings = Settings(),
              enforceCeiling: Boolean = true): Int = {
-    val cur = currentManifest(fs, root)
+    refuseLegacyJournal(fs, root)
+    val cur = head(fs, root)
     val n = cur.map(_.version).getOrElse(0) + 1
     val kept = settings.orElse(cur.map(_.settings).getOrElse(Settings()))
     val expiring = cur.map(_.retired).getOrElse(Nil) // one commit old
@@ -377,22 +373,12 @@ private[graft] object Snapshots {
     // the remedy's own config commit ([[graft.sinks.Sinks
     // .setCompactionTarget]]) keeps it equal — neither may be blocked
     // by the very guard that demands them. `enforceCeiling = false` is
-    // [[commitPending]]'s escape: a journaled install has already
-    // published its files ([[StagedCommit.publishOps]]), so refusing
-    // ITS commit could only wedge the heal loop — journaled flows are
-    // guarded in [[writePending]] instead, before anything installs.
-    if (enforceCeiling) {
-      val curData = cur.map(_.data.size).getOrElse(0)
-      require(data.size <= maxManifestLines || data.size <= curData,
-        s"snapshot commit of $root would track ${data.size} data files, " +
-          s"past the $maxManifestLines-line manifest ceiling (the " +
-          "measured superlinear decade — PLANS.md round 13: 356 s " +
-          "commits at 10^7 lines). The table has outgrown its file " +
-          "granularity: raise its per-table compaction graduation size " +
-          "(Sinks.setCompactionTarget / the manifest `targetbytes` " +
-          "line — lines ~ tableBytes/targetBytes), or override " +
-          "graft.snapshots.maxManifestLines if you accept the cost.")
-    }
+    // [[replay]]'s escape: a journaled install has already published
+    // its files ([[StagedCommit.publishOps]]), so refusing ITS commit
+    // could only wedge the heal loop — journaled flows are guarded in
+    // [[snapOp]] instead, before the manifest freezes.
+    if (enforceCeiling)
+      requireUnderCeiling(root, data.size, cur.map(_.data.size).getOrElse(0))
     // GROUP-PIN protection (r11 verdict task #2 — the lag-liveness
     // edge): a version some GROUP manifest still NAMES must stay
     // resolvable, and its data files alive, for ANY commit lag a
@@ -508,7 +494,7 @@ private[graft] object Snapshots {
   def commitGroup(fs: FileSystem, groupRoot: Path,
                   members: Seq[(String, Path)]): Int = {
     val vec = members.map { case (name, root) =>
-      name -> currentManifest(fs, root).map(_.version).getOrElse(0)
+      name -> head(fs, root).map(_.version).getOrElse(0)
     }
     val cur = currentGroupFile(fs, groupRoot)
     val curVec = cur.map { case (_, lines) => parseGroup(lines) }
@@ -825,80 +811,72 @@ private[graft] object Snapshots {
     }
   }
 
-  /** Journal a compaction's intent BEFORE its merged files install:
-    * the `replaced` originals and the `merged` files (both
-    * root-relative), and the `settings` its commit sets. Consumed by
-    * [[commitPending]] on success or resolved by [[heal]] after a
-    * crash. */
-  def writePending(fs: FileSystem, root: Path, replaced: Seq[String],
-                   merged: Seq[String],
-                   settings: Settings = Settings()): Unit = {
-    // the journaled flow's ceiling guard — HERE, before any file
-    // installs: once [[StagedCommit.publishOps]] runs, the journal
-    // must be completable unconditionally ([[commitPending]] commits
-    // with `enforceCeiling = false`), or a refused completion would
-    // wedge every subsequent writer entry's [[heal]]. Projected from
-    // the manifest alone (adopted unlisted files are not visible here;
-    // they are torn-append debris, bounded by one batch) — same
-    // data-line quantity, same shrink-always-allowed escape as
-    // [[commit]]'s guard.
-    val curData = currentManifest(fs, root).map(_.data.size).getOrElse(0)
-    val projected = curData - replaced.size + merged.size
-    require(projected <= maxManifestLines || projected <= curData,
-      s"journaled snapshot commit of $root would track ~$projected data " +
-        s"files, past the $maxManifestLines-line manifest ceiling " +
-        "(PLANS.md round 13: superlinear past 10^6). Raise the " +
-        "per-table compaction graduation size (Sinks." +
-        "setCompactionTarget / the manifest `targetbytes` line), or " +
-        "override graft.snapshots.maxManifestLines if you accept the " +
-        "cost.")
-    fs.mkdirs(snapDir(root))
-    write(fs, pendingPath(root),
-      (settings.lines ++
-        replaced.map(p => s"replaced $p") ++
-        merged.map(p => s"merged $p")).mkString("\n"))
+  /** The manifest-ceiling guard of [[commit]] and [[snapOp]]: `data`
+    * lines past [[maxManifestLines]] are refused unless they do not
+    * grow the head's `curData` (see [[commit]]). */
+  private def requireUnderCeiling(root: Path, data: Int,
+                                  curData: Int): Unit =
+    require(data <= maxManifestLines || data <= curData,
+      s"snapshot commit of $root would track $data data files, " +
+        s"past the $maxManifestLines-line manifest ceiling (the " +
+        "measured superlinear decade — PLANS.md round 13: 356 s " +
+        "commits at 10^7 lines). The table has outgrown its file " +
+        "granularity: raise its per-table compaction graduation size " +
+        "(Sinks.setCompactionTarget / the manifest `targetbytes` " +
+        "line — lines ~ tableBytes/targetBytes), or override " +
+        "graft.snapshots.maxManifestLines if you accept the cost.")
+
+  /** Refuse the crash journal an older version kept at `_snap/pending`:
+    * left by a crashed write, it names installed files whose replaced
+    * originals were never retired, so committing over it would adopt
+    * both and duplicate rows. Only the version that wrote it heals it. */
+  private[graft] def refuseLegacyJournal(fs: FileSystem, root: Path): Unit =
+    require(!fs.exists(new Path(snapDir(root), "pending")),
+      s"$root/_snap/pending is the crash journal of an interrupted " +
+        "write by an older version, which this version does not " +
+        "replay. Run one write of this table with the version that " +
+        "wrote it (its writer entry heals the journal), then retry; " +
+        "nothing was changed.")
+
+  /** The [[StagedCommit.Snap]] op that commits `root` after a journaled
+    * install of `added` files replacing `replaced` (root-relative),
+    * recording `settings` (a rebucket's count, a retrain's generation
+    * flip with the layout even when a heal commits). It records the
+    * version it creates: `head` (resolved by the caller under the
+    * writer lock) + 1. The ceiling guard runs here, before the manifest
+    * freezes — once the moves run, the commit must complete —
+    * projected from the head alone (unlisted files are torn-append
+    * debris, bounded by one batch). */
+  private[graft] def snapOp(fs: FileSystem, root: Path, head: Manifest,
+                            replaced: Seq[String], added: Int,
+                            settings: Settings = Settings()): StagedCommit.Snap = {
+    refuseLegacyJournal(fs, root)
+    requireUnderCeiling(root,
+      head.data.size - replaced.size + added, head.data.size)
+    StagedCommit.Snap(root, head.version + 1, replaced, settings)
   }
 
-  /** Complete a journaled compaction: snapshot-commit with the
-    * journal's replaced set and settings (a rebucket's count, a
-    * retrain's generation — so a crash-healed mutation still commits
-    * its settings and layout together), then drop the journal. */
-  def commitPending(fs: FileSystem, root: Path): Unit = {
-    val p = pendingPath(root)
-    if (!fs.exists(p)) return
-    val lines = readLines(fs, p)
-    // enforceCeiling = false: the journaled install already published
-    // its files, so this commit MUST complete (the guard ran in
-    // [[writePending]], before anything installed) — refusing here
-    // would wedge the heal loop forever
-    commit(fs, root,
-      replaced = lines.collect { case s if s.startsWith("replaced ") => s.drop(9) },
-      settings = parseSettings(lines.iterator),
-      enforceCeiling = false)
-    fs.delete(p, false)
-  }
-
-  /** Resolve a crashed compaction's journal — MUST run at writer entry
-    * AFTER [[StagedCommit.heal]] (which completes any torn installs):
-    * if the journaled merged files all exist the compaction installed
-    * and only its snapshot commit is missing → finish it; if none
-    * exist the compaction never installed → abort the journal (the
-    * originals are still the data). The staged-manifest heal is
-    * all-or-nothing, so a mixed state cannot occur. */
-  def heal(fs: FileSystem, root: Path): Unit = {
-    val p = pendingPath(root)
-    if (!fs.exists(p)) return
-    val merged = readLines(fs, p)
-      .collect { case s if s.startsWith("merged ") => s.drop(7) }
-    val present = merged.count(m => fs.exists(new Path(root, m)))
-    if (present == merged.length && merged.nonEmpty) commitPending(fs, root)
-    else {
-      require(present == 0,
-        s"snapshot heal found $present of ${merged.length} merged files — " +
-          "staged-manifest heal must run first")
-      fs.delete(p, false)
+  /** The last phase of a [[StagedCommit]] manifest: commit `s`, ceiling
+    * guard off (its files are installed; a refusal would wedge every
+    * later heal), unless the head already reached `s.version` — a heal
+    * replaying a landed commit would otherwise list the replaced files
+    * as retired AND expiring, cutting a reader's grace to one commit. */
+  private[apps] def replay(fs: FileSystem, s: StagedCommit.Snap): Unit =
+    if (currentVersion(fs, s.root).forall(_ < s.version)) {
+      commit(fs, s.root, s.replaced, s.settings, enforceCeiling = false); ()
     }
-  }
+
+  /** A [[StagedCommit.Snap]]'s payload as manifest-line fields: the
+    * setting lines, then `replaced <file>` per replaced file. */
+  private[apps] def snapFields(replaced: Seq[String],
+                               settings: Settings): Seq[String] =
+    settings.lines ++ replaced.map(p => s"replaced $p")
+
+  /** [[snapFields]] parsed back, settings through [[parseSettings]]. */
+  private[apps] def parseSnapFields(fields: Seq[String])
+      : (Seq[String], Settings) =
+    (fields.collect { case f if f.startsWith("replaced ") => f.drop(9) },
+      parseSettings(fields.iterator))
 
   private def write(fs: FileSystem, p: Path, content: String): Unit = {
     val out = fs.create(p, true)

@@ -3,27 +3,32 @@ package graft.apps
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Manifest-ordered staged commit for multi-directory parquet updates —
-  * the crash contract shared by [[IncrementalReleaseApp]],
-  * [[VectorIndexApp]] and [[Compaction]].
+  * the one crash journal of every file-moving writer:
+  * [[IncrementalReleaseApp]], [[TextIndexApp]], [[VectorIndexApp]],
+  * [[Compaction]] and the keyed sinks ([[graft.sinks.Sinks]]).
   *
   * A writer stages every output under one `_staging` directory, then
   * [[publish]]es: the staged files are enumerated into a manifest
   * (written atomically via temp + rename) of typed operations —
-  * deletions (`D`, compaction's replaced files), bulk moves (`M`) and
-  * watermark moves (`W`) — executed in three strict phases: all
-  * deletions (bounded rename pool), then all bulk moves (pool), then
-  * the watermark moves serially last. The invariants a replayer can
-  * rely on:
+  * deletions (`D`, compaction's replaced files), bulk moves (`M`),
+  * watermark moves (`W`) and snapshot commits (`S`, one per
+  * [[Snapshots]] table the moves change) — executed in four strict
+  * phases: all deletions (bounded rename pool), then all bulk moves
+  * (pool), then the watermark moves serially, then the snapshot
+  * commits serially last. The invariants a replayer can rely on:
   *
   *  - no manifest ⇒ nothing was published — [[heal]] discards the
   *    staging and the writer recomputes;
   *  - manifest present ⇒ the op set is FROZEN — [[heal]] finishes the
-  *    remaining ops idempotently in the same three phases (a deletion
+  *    remaining ops idempotently in the same four phases (a deletion
   *    already applied is a no-op; a file already at its destination is
-  *    skipped; missing on both sides fails loudly);
-  *  - the `W` watermark ops run only after every other op landed, so a
+  *    skipped; missing on both sides fails loudly; a snapshot commit
+  *    whose table's head already reached the version the op recorded
+  *    is skipped, so a replay never commits twice);
+  *  - the `W` watermark ops run only after every move landed, so a
   *    watermark check ("is this batch applied?") can never observe a
-  *    half-applied batch as applied;
+  *    half-applied batch as applied; the `S` commits run after every
+  *    file landed, so a table version never lists a missing file;
   *  - deletions complete strictly BEFORE any move installs, so a
   *    compaction manifest (delete N small files, install their merged
   *    replacement) can never make a row visible twice — the crash
@@ -44,13 +49,19 @@ object StagedCommit {
   final case class Del(p: Path) extends Op
   /** Move `src` → `dst` — the bulk phase 2, pooled. */
   final case class Move(src: Path, dst: Path) extends Op
-  /** Watermark move — phase 3, strictly serial, after everything. */
+  /** Watermark move — phase 3, strictly serial, after every move. */
   final case class Wmark(src: Path, dst: Path) extends Op
+  /** Snapshot commit creating `version` of table `root` — phase 4,
+    * serial, last. Built by [[Snapshots.snapOp]], which owns the
+    * payload's encoding. */
+  final case class Snap(root: Path, version: Int, replaced: Seq[String],
+                        settings: Snapshots.Settings) extends Op
 
   /** TEST-ONLY crash injection for replay-heal specs — never set
     * outside tests. `crashBeforeCommit` dies after staging but before
     * the commit manifest exists; `crashAfterMoves = n` dies after the
-    * n-th committed op (deletions count too). */
+    * n-th committed file op (deletions count too, snapshot commits
+    * do not). */
   private[apps] var crashBeforeCommit: Boolean = false
   private[apps] var crashAfterMoves: Int = Int.MaxValue
 
@@ -79,8 +90,9 @@ object StagedCommit {
 
   /** Freeze an explicit op list into the manifest and execute it — the
     * entry point for ops [[publish]]'s directory enumeration can't
-    * express (compaction's delete-then-install). `staging` must hold
-    * every `Move`/`Wmark` source (it is removed at the end). */
+    * express (compaction's delete-then-install, snapshot commits).
+    * `staging` must hold every `Move`/`Wmark` source (it is removed at
+    * the end); a lone `Snap` (a delete-only mutation) still runs. */
   def publishOps(fs: FileSystem, staging: Path, ops: Seq[Op]): Unit = {
     if (crashBeforeCommit) throw new IllegalStateException(
       "injected crash: staged but uncommitted")
@@ -92,7 +104,7 @@ object StagedCommit {
 
   /** Complete (or discard) a torn publish left by a crash: a staging
     * dir WITH a commit manifest finishes its ops idempotently (same
-    * three phases, same pool); one WITHOUT a manifest never published
+    * four phases, same pool); one WITHOUT a manifest never published
     * anything and is removed. */
   def heal(fs: FileSystem, staging: Path): Unit = {
     if (!fs.exists(staging)) return
@@ -108,11 +120,12 @@ object StagedCommit {
 
   // ------------------------------------------------------------ execution
 
-  /** The three strict phases shared by publish and heal: deletions
-    * (pool) → bulk moves (pool) → watermark moves (serial). The global
-    * barriers between phases subsume any per-directory ordering a
-    * compaction manifest needs (every replaced file is gone before any
-    * merged file installs). */
+  /** The four strict phases shared by publish and heal: deletions
+    * (pool) → bulk moves (pool) → watermark moves (serial) → snapshot
+    * commits (serial). The global barriers between phases subsume any
+    * per-directory ordering a compaction manifest needs (every replaced
+    * file is gone before any merged file installs, every file is in
+    * place before a manifest lists it). */
   private def execute(fs: FileSystem, ops: Seq[Op], healing: Boolean): Unit = {
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     runPooled(ops.collect { case d: Del => d })(d =>
@@ -121,6 +134,7 @@ object StagedCommit {
       moveOne(fs, m.src, m.dst, counter, healing))
     ops.collect { case w: Wmark => w }.foreach(w =>
       moveOne(fs, w.src, w.dst, counter, healing))
+    ops.collect { case s: Snap => s }.foreach(Snapshots.replay(fs, _))
   }
 
   private def runPooled[T](items: Seq[T])(f: T => Unit): Unit = {
@@ -189,12 +203,18 @@ object StagedCommit {
     case Del(p)        => s"D\t$p"
     case Move(s, d)    => s"M\t$s\t$d"
     case Wmark(s, d)   => s"W\t$s\t$d"
+    case Snap(r, v, replaced, settings) =>
+      (Seq("S", r.toString, v.toString) ++
+        Snapshots.snapFields(replaced, settings)).mkString("\t")
   }
 
   private def parseOp(line: String): Op = line.split('\t') match {
     case Array("D", p)    => Del(new Path(p))
     case Array("M", s, d) => Move(new Path(s), new Path(d))
     case Array("W", s, d) => Wmark(new Path(s), new Path(d))
+    case Array("S", r, v, payload @ _*) =>
+      val (replaced, settings) = Snapshots.parseSnapFields(payload)
+      Snap(new Path(r), v.toInt, replaced, settings)
     // legacy (pre-op-typed) manifest: untagged "src\tdst" move lines —
     // a torn commit frozen by the previous format must stay healable
     // after an upgrade ("D" can never be a legacy src: paths in the

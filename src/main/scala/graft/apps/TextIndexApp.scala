@@ -167,8 +167,6 @@ object TextIndexApp {
       spark.sparkContext.hadoopConfiguration)
     StagedCommit.withWriterLock(fs, new Path(indexDir)) {
       StagedCommit.heal(fs, staging(indexDir))
-      Snapshots.heal(fs, new Path(s"$indexDir/postings"))
-      Snapshots.heal(fs, new Path(s"$indexDir/doclens"))
       // adopt files a torn append published but never snapshot-committed
       // BEFORE the early returns below (see VectorIndexApp.append).
       // An adoption means that append also never ran ITS compaction —
@@ -234,9 +232,9 @@ object TextIndexApp {
     * LIVE, against a served index:
     *
     *  - rows are read through the pinned manifest, re-assigned
-    *    `bucket = stable60(token) % newN`, staged, and installed via
-    *    the same pending-journal → all-or-nothing [[StagedCommit]]
-    *    install → snapshot commit every index mutation uses;
+    *    `bucket = stable60(token) % newN`, staged, and installed and
+    *    snapshot-committed through one [[StagedCommit]] manifest, the
+    *    commit its last phase ([[Snapshots.snapOp]]);
     *  - the new count rides the commit itself (the manifest `nbuckets`
     *    line), so count and layout flip in ONE rename; later appends
     *    and queries resolve the count from the manifest
@@ -247,10 +245,10 @@ object TextIndexApp {
     *    manifest); one planned after sees the complete new layout with
     *    the new count — never a mix;
     *  - a crash at any stage heals at the next writer entry to exactly
-    *    old-everything or new-everything: the entry's
-    *    [[StagedCommit.heal]] finishes or discards the install and
-    *    [[Snapshots.heal]]'s pending journal carries the count, so
-    *    even the healed commit flips both together.
+    *    old-everything or new-everything: the entry's one
+    *    [[StagedCommit.heal]] discards an unfrozen install or rolls a
+    *    frozen one forward, and the manifest's commit op carries the
+    *    count, so even the healed commit flips both together.
     *
     * `doclens`, `meta` and df/corpus stats are untouched (nothing
     * denormalized depends on the router), so results are IDENTICAL
@@ -264,14 +262,12 @@ object TextIndexApp {
     val fs = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     StagedCommit.withWriterLock(fs, new Path(indexDir)) {
-      // the full writer-entry discipline (same as append): heal torn
-      // installs and journals, adopt unlisted files, re-apply a
-      // crashed retraction, THEN advance the group over the now-
-      // consistent heads — a crashed previous rebucket completes or
-      // aborts right here, before this one stages anything
+      // the full writer-entry discipline (same as append): heal a torn
+      // install, adopt unlisted files, re-apply a crashed retraction,
+      // THEN advance the group over the now-consistent heads — a
+      // crashed previous rebucket completes or aborts right here,
+      // before this one stages anything
       StagedCommit.heal(fs, staging(indexDir))
-      Snapshots.heal(fs, new Path(s"$indexDir/postings"))
-      Snapshots.heal(fs, new Path(s"$indexDir/doclens"))
       val adopted =
         Snapshots.adoptUnlisted(fs, new Path(s"$indexDir/postings")) |
         Snapshots.adoptUnlisted(fs, new Path(s"$indexDir/doclens"))
@@ -280,11 +276,11 @@ object TextIndexApp {
       advanceGroup(fs, indexDir)
       if (nBucketsOf(spark, indexDir) == newBuckets) return
       val root = new Path(s"$indexDir/postings")
-      val cur = Snapshots.currentFiles(fs, root).getOrElse {
+      val head = Snapshots.head(fs, root).getOrElse {
         throw new IllegalStateException(
           s"rebucket requires a snapshot-managed postings table at $root")
       }
-      if (cur.isEmpty) {
+      if (head.data.isEmpty) {
         // nothing to move — the count flip is a bare commit
         Snapshots.commit(fs, root,
           settings = Snapshots.Settings(Some(newBuckets)))
@@ -300,18 +296,16 @@ object TextIndexApp {
       val stagedRoot = new Path(s"$stg/reb/postings")
       val moves = Compaction.partitionDirs(fs, stagedRoot).flatMap { d =>
         Compaction.visibleFiles(fs, d).map { f =>
-          val rel = s"${d.getName}/${f.getPath.getName}"
-          (rel, StagedCommit.Move(f.getPath, new Path(root, rel)))
+          StagedCommit.Move(f.getPath,
+            new Path(root, s"${d.getName}/${f.getPath.getName}"))
         }
       }
-      // journal BEFORE the install (replaced = every current file; the
-      // count rides the journal so a crash-healed rebucket still flips
-      // count and layout together), install all-or-nothing, commit
-      Snapshots.writePending(fs, root, replaced = cur,
-        merged = moves.map(_._1),
-        settings = Snapshots.Settings(Some(newBuckets)))
-      StagedCommit.publishOps(fs, stg, moves.map(_._2))
-      Snapshots.commitPending(fs, root)
+      // one manifest: install all-or-nothing, then commit with replaced
+      // = every current file and the count riding the commit op, so a
+      // crash-healed rebucket still flips count and layout together
+      StagedCommit.publishOps(fs, stg, moves :+ Snapshots.snapOp(fs, root,
+        head, replaced = head.data, added = moves.size,
+        settings = Snapshots.Settings(Some(newBuckets))))
       advanceGroup(fs, indexDir)
     }
   }
@@ -532,7 +526,6 @@ object TextIndexApp {
         throw new IllegalStateException(
           "injected crash: postings retracted, doclens not")
       val root = new Path(s"$indexDir/$t")
-      Snapshots.heal(fs, root)
       // flush pending retirements: discovery below is a RAW scan
       // (same documented takedown trade as the vector index)
       Snapshots.commit(fs, root)

@@ -338,7 +338,6 @@ object VectorIndexApp {
       spark.sparkContext.hadoopConfiguration)
     StagedCommit.withWriterLock(fs, new Path(indexDir)) {
       StagedCommit.heal(fs, staging(indexDir))
-      Snapshots.heal(fs, new Path(s"$indexDir/codes"))
       // a torn PREVIOUS append may have published (watermark advanced)
       // but crashed before its snapshot commit — its files are visible
       // yet unlisted, and the early returns below would otherwise skip
@@ -431,8 +430,9 @@ object VectorIndexApp {
     *    and pins compose for free: a hybrid group pinning `codes`
     *    pins the books THROUGH it);
     *  - a crash at any stage heals at the next writer entry to exactly
-    *    old-everything or new-everything — the pending journal carries
-    *    the generation, so even a healed flip pairs layout and books.
+    *    old-everything or new-everything — the install and the flip
+    *    are one [[StagedCommit]] manifest whose commit op carries the
+    *    generation, so even a healed flip pairs layout and books.
     *
     * PURE RE-ENCODE contract: `corpus` must be the indexed corpus
     * (same watermark — append new vectors first, retract before or
@@ -448,12 +448,11 @@ object VectorIndexApp {
     val fs = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     StagedCommit.withWriterLock(fs, new Path(indexDir)) {
-      // writer-entry discipline (same as append): finish or discard a
-      // torn previous install, complete a journaled flip, adopt a torn
+      // writer-entry discipline (same as append): finish (flip
+      // included) or discard a torn previous install, adopt a torn
       // append's unlisted files
       StagedCommit.heal(fs, staging(indexDir))
       val codesRoot = new Path(s"$indexDir/codes")
-      Snapshots.heal(fs, codesRoot)
       if (Snapshots.adoptUnlisted(fs, codesRoot))
         compactIndex(spark, fs, indexDir, touched = None)
       require(fs.exists(new Path(s"$indexDir/meta")),
@@ -513,20 +512,20 @@ object VectorIndexApp {
       val stagedRoot = new Path(s"$stg/rt/codes")
       val moves = Compaction.partitionDirs(fs, stagedRoot).flatMap { d =>
         Compaction.visibleFiles(fs, d).map { f =>
-          val rel = s"${d.getName}/${f.getPath.getName}"
-          (rel, StagedCommit.Move(f.getPath, new Path(codesRoot, rel)))
+          StagedCommit.Move(f.getPath,
+            new Path(codesRoot, s"${d.getName}/${f.getPath.getName}"))
         }
       }
-      // journal BEFORE the install (replaced = every current file; the
-      // generation rides the journal so a crash-healed retrain still
-      // flips books and layout together), install all-or-nothing,
-      // commit — the flip
-      val cur = Snapshots.currentFiles(fs, codesRoot).getOrElse(Nil)
-      Snapshots.writePending(fs, codesRoot, replaced = cur,
-        merged = moves.map(_._1),
-        settings = Snapshots.Settings(trainedGen = Some(gen)))
-      StagedCommit.publishOps(fs, stg, moves.map(_._2))
-      Snapshots.commitPending(fs, codesRoot)
+      // one manifest: install all-or-nothing, then the flip — a commit
+      // with replaced = every current file and the generation riding
+      // the commit op, so a crash-healed retrain still flips books and
+      // layout together
+      val head = Snapshots.head(fs, codesRoot).getOrElse(throw
+        new IllegalStateException(
+          s"retrain requires a snapshot-managed codes table at $codesRoot"))
+      StagedCommit.publishOps(fs, stg, moves :+ Snapshots.snapOp(fs,
+        codesRoot, head, replaced = head.data, added = moves.size,
+        settings = Snapshots.Settings(trainedGen = Some(gen))))
     }
   }
 
@@ -641,7 +640,6 @@ object VectorIndexApp {
       // no-crash takedown never pays an O(index) recursive listing.
       StagedCommit.heal(fs, staging(indexDir))
       val codesRoot = new Path(s"$indexDir/codes")
-      Snapshots.heal(fs, codesRoot)
       // flush the snapshot's pending retirements: discovery below is a
       // RAW directory scan, and a retired-but-not-yet-deleted merge
       // source would show its rows twice (and get pointlessly

@@ -25,9 +25,9 @@ import graft.operators.DedupOps
   *
   * Every keyed table (K3/K4 and the mart tier) commits through ONE
   * protocol: the [[Snapshots]] manifest. A mutation stages its touched
-  * buckets, journals the intent, installs the staged files and commits
-  * a new manifest version — table-atomic under crashes and for
-  * concurrent readers (see [[upsertKeyed]]).
+  * buckets, then one [[StagedCommit]] manifest installs the staged
+  * files and commits a new manifest version — table-atomic under
+  * crashes and for concurrent readers (see [[upsertKeyed]]).
   *
   * Exactly-once (R1/R2): streaming variants take a mandatory checkpoint
   * directory. `streamAppend` rides the file-sink commit log; `streamUpsert`
@@ -108,9 +108,9 @@ object Sinks {
                   dropCols: Seq[String] = Nil,
                   nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path, Some(nBuckets)) { (n, files) =>
+    locked(fs, path, Some(nBuckets)) { (n, head) =>
       upsertKeyedBody(spark, fs, incoming, keys, order, path, dropCols, n,
-        files)
+        head)
     }
   }
 
@@ -118,32 +118,31 @@ object Sinks {
                               incoming: DataFrame, keys: Seq[String],
                               order: Seq[String], path: String,
                               dropCols: Seq[String], n: Int,
-                              files: Seq[String]): Unit = {
+                              head: Snapshots.Manifest): Unit = {
     val withB = incoming.withColumn("__bucket", bucketOf(keys, n))
     val touched = withB.select("__bucket").distinct()
       .collect().map(_.getInt(0)).sorted // ≤ n values, driver-safe
     if (touched.isEmpty) return
-    val merged = touchedFiles(spark, path, files, touched.toIndexedSeq) match {
+    val merged = touchedFiles(spark, path, head.data, touched.toIndexedSeq) match {
       case Some(cur) => cur.unionByName(withB, allowMissingColumns = true)
       case None => withB
     }
     val deduped = DedupOps.keepLast(merged, keys.map(col), order.map(col))
       .drop(dropCols: _*)
-    stageAndInstall(spark, fs, path, files, deduped, touched.toIndexedSeq,
+    stageAndInstall(spark, fs, path, head, deduped, touched.toIndexedSeq,
       Snapshots.Settings(Some(n)))
   }
 
   /** Run `body` under the table's single-writer lock (the [[Snapshots]]
     * contract — a second concurrent writer must fail loudly, not
-    * interleave pending journals and manifest versions), after healing
-    * any torn previous write: staged-install first (its journaled files
-    * must be all-present-or-none before the snapshot heal can
-    * adjudicate the pending journal), then the journal. */
+    * interleave staged installs and manifest versions), after healing
+    * any torn previous write: the one [[StagedCommit.heal]] of the
+    * table's staging dir rolls a frozen install and its snapshot
+    * commit forward together, or discards an unfrozen one. */
   private def healedUnderLock(fs: FileSystem, path: String)
                              (body: => Unit): Unit =
     StagedCommit.withWriterLock(fs, new Path(path)) {
       StagedCommit.heal(fs, new Path(path + ".staging"))
-      Snapshots.heal(fs, new Path(path))
       body
     }
 
@@ -152,23 +151,26 @@ object Sinks {
     * fixed until the body's one commit): its recorded bucket count —
     * mutations hash with it, never with a caller's differing
     * `nBuckets`, which would put a key in a second bucket and
-    * duplicate it — and its data files. A table with no manifest and
+    * duplicate it — and its manifest. A table with no manifest and
     * no data is bootstrapped by a version-1 commit recording the
     * writer's `nBuckets`; a mutation that brings no count has nothing
-    * to change there and skips `body`. */
+    * to change there and skips `body`. An older version's crash
+    * journal is refused before anything is staged
+    * ([[Snapshots.refuseLegacyJournal]]). */
   private def locked(fs: FileSystem, path: String,
                      nBuckets: Option[Int] = None)
-                    (body: (Int, Seq[String]) => Unit): Unit =
+                    (body: (Int, Snapshots.Manifest) => Unit): Unit =
     healedUnderLock(fs, path) {
-      keyedHead(fs, path).orElse(nBuckets.map { n =>
+      Snapshots.refuseLegacyJournal(fs, new Path(path))
+      keyedHead(fs, path).orElse(nBuckets.flatMap { n =>
         Snapshots.commit(fs, new Path(path),
           settings = Snapshots.Settings(Some(n)))
-        (n, Nil)
-      }).foreach { case (n, files) => body(n, files) }
+        keyedHead(fs, path)
+      }).foreach { case (n, head) => body(n, head) }
     }
 
-  /** The head of keyed table `path`: its recorded bucket count and data
-    * files from ONE manifest resolution (two could straddle a rebucket
+  /** The head of keyed table `path`: its recorded bucket count and
+    * manifest from ONE resolution (two could straddle a rebucket
     * commit and prune the new layout with the old count), or None while
     * the table holds neither a manifest nor data. A keyed table has one
     * on-disk format — a manifest whose head records `nbuckets`. A raw
@@ -177,10 +179,11 @@ object Sinks {
     * one-time fix: [[upgrade]]. Hashing its keys with a guessed count
     * would prune and merge the wrong buckets. */
   private def keyedHead(fs: FileSystem,
-                        path: String): Option[(Int, Seq[String])] = {
+                        path: String): Option[(Int, Snapshots.Manifest)] = {
     val root = new Path(path)
-    Snapshots.currentFilesAndSettings(fs, root) match {
-      case Some((files, Snapshots.Settings(Some(n), _, _))) => Some((n, files))
+    Snapshots.head(fs, root) match {
+      case Some(m @ Snapshots.Manifest(_, Snapshots.Settings(Some(n), _, _),
+          _, _, _)) => Some((n, m))
       case head =>
         require(head.isEmpty && !Compaction.holdsData(fs, root),
           s"$path is not a snapshot-managed keyed table of this version " +
@@ -253,11 +256,11 @@ object Sinks {
   }
 
   /** THE commit of every keyed-table mutation: stage `df` (which must
-    * carry `__bucket`) partitioned by bucket, journal the intent,
-    * install the staged files ALONGSIDE the live ones (all-or-nothing
-    * through a [[StagedCommit]] manifest — staged part-file names carry
-    * a per-job UUID, so they never collide with live files), then
-    * snapshot-commit: the staged files become the `buckets`' data and
+    * carry `__bucket`) partitioned by bucket, then freeze ONE
+    * [[StagedCommit]] manifest that installs the staged files ALONGSIDE
+    * the live ones (staged part-file names carry a per-job UUID, so
+    * they never collide with live files) and, as its last phase,
+    * snapshot-commits: the staged files become the `buckets`' data and
     * the replaced originals RETIRE, outliving the commit by two more
     * commits (the readers' grace window, same contract as
     * [[graft.apps.Compaction]]'s snapshot groups). A targeted bucket
@@ -265,15 +268,15 @@ object Sinks {
     * A reader that planned before the commit keeps every file it
     * resolved; one that plans after sees exactly the post-batch table —
     * pre- or post-batch state, never a mix, never a deleted file.
-    * Crash-safe via [[locked]]'s heal-first discipline: the pending
-    * journal is either aborted (nothing installed) or completed
-    * (everything installed) on the next writer entry. `settings` ride
-    * the journal and the commit — the bucket count `df` was hashed
-    * with, plus a rebucket's graduation target — so a rebucket's
-    * count, target and layout flip atomically in the crash-heal path
-    * too. `files` is the head's data list from [[locked]]. */
+    * Crash-safe via [[locked]]'s heal-first discipline: a manifest that
+    * never froze is discarded (nothing installed), a frozen one rolls
+    * forward, moves and commit, on the next writer entry. `settings`
+    * ride the commit op — the bucket count `df` was hashed with, plus
+    * a rebucket's graduation target — so a rebucket's count, target
+    * and layout flip atomically in the crash-heal path too. `head` is
+    * the head [[locked]] resolved. */
   private def stageAndInstall(spark: SparkSession, fs: FileSystem,
-                              path: String, files: Seq[String],
+                              path: String, head: Snapshots.Manifest,
                               df: DataFrame, buckets: Seq[Int],
                               settings: Snapshots.Settings): Unit = {
     val root = new Path(path)
@@ -282,18 +285,15 @@ object Sinks {
       .parquet(staging.toString)
     val names = buckets.map(b => s"__bucket=$b")
     val nameSet = names.toSet
-    val replaced = files.filter(f => nameSet.contains(f.takeWhile(_ != '/')))
+    val replaced = head.data.filter(f => nameSet.contains(f.takeWhile(_ != '/')))
     val moves = names.flatMap { n =>
       Compaction.visibleFiles(fs, new Path(staging, n)).map { st =>
-        (s"$n/${st.getPath.getName}",
-          StagedCommit.Move(st.getPath, new Path(root, s"$n/${st.getPath.getName}")))
+        StagedCommit.Move(st.getPath, new Path(root, s"$n/${st.getPath.getName}"))
       }
     }
     if (replaced.isEmpty && moves.isEmpty) { fs.delete(staging, true); return }
-    fs.mkdirs(root)
-    Snapshots.writePending(fs, root, replaced, moves.map(_._1), settings)
-    StagedCommit.publishOps(fs, staging, moves.map(_._2))
-    Snapshots.commitPending(fs, root)
+    StagedCommit.publishOps(fs, staging, moves :+
+      Snapshots.snapOp(fs, root, head, replaced, moves.size, settings))
   }
 
   /** [[upsertKeyed]]'s ADDITIVE sibling — the incremental bucket merge
@@ -324,9 +324,9 @@ object Sinks {
                     combine: Seq[Column], batchId: Long, path: String,
                     nBuckets: Int = DefaultUpsertBuckets): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    locked(fs, path, Some(nBuckets)) { (n, files) =>
+    locked(fs, path, Some(nBuckets)) { (n, head) =>
       upsertCombineBody(spark, fs, delta, keys, combine, batchId, path, n,
-        files)
+        head)
     }
   }
 
@@ -334,7 +334,7 @@ object Sinks {
                                 delta: DataFrame, keys: Seq[String],
                                 combine: Seq[Column], batchId: Long,
                                 path: String, n: Int,
-                                files: Seq[String]): Unit = {
+                                head: Snapshots.Manifest): Unit = {
     val withB = delta
       .withColumn("__bucket", bucketOf(keys, n))
       .withColumn("__mart_batch", lit(batchId))
@@ -342,7 +342,7 @@ object Sinks {
       .collect().map(_.getInt(0)).sorted // ≤ n values, driver-safe
     if (touched.isEmpty) return
     val (skip, current) =
-      touchedFiles(spark, path, files, touched.toIndexedSeq) match {
+      touchedFiles(spark, path, head.data, touched.toIndexedSeq) match {
         case Some(live) =>
           // buckets stamped with this batch id OR LATER are fully merged
           // (stamps apply in strictly increasing order per table, and the
@@ -368,7 +368,7 @@ object Sinks {
       .groupBy((keys :+ "__bucket").map(col): _*)
       .agg(combine.head, combine.tail :+
         max(col("__mart_batch")).as("__mart_batch"): _*)
-    stageAndInstall(spark, fs, path, files, combined, todo.toIndexedSeq,
+    stageAndInstall(spark, fs, path, head, combined, todo.toIndexedSeq,
       Snapshots.Settings(Some(n)))
   }
 
@@ -416,13 +416,13 @@ object Sinks {
                   predicate: Column): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path) { (n, files) =>
+    locked(fs, path) { (n, head) =>
       val hit = coalesce(predicate, lit(false))
       val affected = Snapshots.readTable(spark, new Path(path)).filter(hit)
         .select("__bucket").distinct().collect().map(_.getInt(0)).sorted
       if (affected.nonEmpty)
-        touchedFiles(spark, path, files, affected.toIndexedSeq).foreach { live =>
-          stageAndInstall(spark, fs, path, files, live.filter(!hit),
+        touchedFiles(spark, path, head.data, affected.toIndexedSeq).foreach { live =>
+          stageAndInstall(spark, fs, path, head, live.filter(!hit),
             affected.toIndexedSeq, Snapshots.Settings(Some(n)))
         }
     }
@@ -446,7 +446,7 @@ object Sinks {
                    keys: Seq[String], combine: Seq[Column]): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path) { (n, files) =>
+    locked(fs, path) { (n, head) =>
       val table = Snapshots.readTable(spark, new Path(path))
       val hit = coalesce(predicate, lit(false))
       val srcBuckets = table.filter(hit)
@@ -463,12 +463,12 @@ object Sinks {
         val dstBuckets = moved
           .select("__bucket").distinct().collect().map(_.getInt(0))
         val touched = (srcBuckets ++ dstBuckets).distinct.sorted.toIndexedSeq
-        val kept = touchedFiles(spark, path, files, touched)
+        val kept = touchedFiles(spark, path, head.data, touched)
           .map(_.filter(!hit)).getOrElse(moved.limit(0))
         val merged = kept.unionByName(moved, allowMissingColumns = true)
           .groupBy((keys :+ "__bucket").map(col): _*)
           .agg(combine.head, combine.tail: _*)
-        stageAndInstall(spark, fs, path, files, merged, touched,
+        stageAndInstall(spark, fs, path, head, merged, touched,
           Snapshots.Settings(Some(n)))
       }
     }
@@ -484,9 +484,9 @@ object Sinks {
     * SAFE to do live:
     *
     *  - rows are read through the pinned manifest, re-assigned
-    *    `__bucket = stable60(key) % newN`, staged, and installed via
-    *    the same pending-journal → all-or-nothing install → snapshot
-    *    commit path every keyed mutation uses;
+    *    `__bucket = stable60(key) % newN`, staged, and installed and
+    *    snapshot-committed through the one [[StagedCommit]] manifest
+    *    every keyed mutation uses;
     *  - the new bucket COUNT rides the commit itself (the manifest's
     *    `nbuckets` line, the table's only record of its count), so
     *    count and layout flip in ONE rename —
@@ -497,8 +497,9 @@ object Sinks {
     *    the complete OLD layout (grace window), one planned after sees
     *    the complete NEW layout — never a mix;
     *  - a crash at any stage heals at the next writer entry to exactly
-    *    old-everything or new-everything (the pending journal carries
-    *    the count, so even the heal's commit flips both together).
+    *    old-everything or new-everything (the manifest's commit op
+    *    carries the count, so even the heal's commit flips both
+    *    together).
     *
     * Like every keyed call, it refuses a table an older version wrote
     * ([[keyedHead]]). Such a table's crash contract was per-bucket replay (a
@@ -514,15 +515,15 @@ object Sinks {
     require(newN > 0, s"bucket count must be positive (got $newN)")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
-    locked(fs, path) { (oldN, curFiles) =>
+    locked(fs, path) { (oldN, head) =>
       if (oldN != newN) {
         val settings = Snapshots.Settings(Some(newN), targetBytes = targetBytes)
-        if (curFiles.isEmpty) {
+        if (head.data.isEmpty) {
           // nothing to move — the count flip is a bare commit
           Snapshots.commit(fs, new Path(path), settings = settings); ()
         } else {
           val table = Snapshots.readTable(spark, new Path(path))
-          val oldBuckets = curFiles.map(_.takeWhile(_ != '/'))
+          val oldBuckets = head.data.map(_.takeWhile(_ != '/'))
             .filter(_.startsWith("__bucket="))
             .map(_.stripPrefix("__bucket=").toInt).distinct
           // one exchange on the NEW bucket key: without it every input
@@ -536,7 +537,7 @@ object Sinks {
           // enumerating 0 until newN is driver-side metadata, where
           // collecting the ACTUAL new ids would re-run the full table
           // rehash once just to learn them
-          stageAndInstall(spark, fs, path, curFiles, restaged,
+          stageAndInstall(spark, fs, path, head, restaged,
             (oldBuckets ++ (0 until newN)).distinct.sorted.toIndexedSeq,
             settings)
         }
@@ -637,7 +638,7 @@ object Sinks {
       s"target rows per bucket must be positive (got $targetRowsPerBucket)")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = keyedHead(fs, path).map(_._2).getOrElse {
+    val files = keyedHead(fs, path).map(_._2.data).getOrElse {
       throw new IllegalArgumentException(
         s"recommendedBuckets: $path holds no table yet")
     }
@@ -705,10 +706,10 @@ object Sinks {
   def readKeyedFor(spark: SparkSession, path: String,
                    forKeys: DataFrame, keys: Seq[String]): Option[DataFrame] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    keyedHead(fs, path).flatMap { case (n, files) =>
+    keyedHead(fs, path).flatMap { case (n, head) =>
       val touched = forKeys.select(bucketOf(keys, n).as("__b"))
         .distinct().collect().map(_.getInt(0)).toIndexedSeq
-      touchedFiles(spark, path, files, touched).map(_.drop("__bucket"))
+      touchedFiles(spark, path, head.data, touched).map(_.drop("__bucket"))
     }
   }
 

@@ -16,7 +16,9 @@ import graft.sinks.Sinks
   * records `nbuckets`. Every keyed write and bucket-pruned read refuses
   * any other layout loudly, naming [[Sinks.upgrade]] and leaving the
   * file tree as it was; `Sinks.upgrade` is the one step that adopts a
-  * table an older version wrote, and it is idempotent. */
+  * table an older version wrote, and it is idempotent. The crash
+  * journal an older version kept at `_snap/pending` is refused by
+  * every keyed write the same way, naming the version that wrote it. */
 class KeyedFormatSpec extends SparkSpec {
   import spark.implicits._
 
@@ -40,9 +42,12 @@ class KeyedFormatSpec extends SparkSpec {
     finally walk.close()
   }
 
-  /** Each keyed call on `dir` throws a message naming the fix, and the
-    * tree under `parent` is unchanged afterwards. */
-  private def assertRefused(parent: String, dir: String): Unit = {
+  /** Each keyed call on `dir` (writes only, unless `reads`) throws a
+    * message naming `fix`, and the tree under `parent` is unchanged
+    * afterwards. */
+  private def assertRefused(parent: String, dir: String,
+                            fix: String = "Sinks.upgrade",
+                            reads: Boolean = true): Unit = {
     val before = tree(parent)
     val calls: Seq[(String, () => Any)] = Seq(
       "upsertCombine" -> (() => Sinks.upsertCombine(spark, delta(10),
@@ -53,9 +58,9 @@ class KeyedFormatSpec extends SparkSpec {
         Seq(3L).toDF("k"), Seq("k"))),
       "deleteWhere" -> (() => Sinks.deleteWhere(spark, dir, col("k") < 5)),
       "rebucket" -> (() => Sinks.rebucket(spark, dir, Seq("k"), newN = 2)))
-    calls.foreach { case (name, call) =>
+    calls.filter(reads || _._1 != "readKeyedFor").foreach { case (name, call) =>
       val e = intercept[IllegalArgumentException](call())
-      assert(e.getMessage.contains("Sinks.upgrade"),
+      assert(e.getMessage.contains(fix),
         s"$name: wrong refusal: ${e.getMessage}")
       assert(tree(parent) == before, s"$name changed the file tree")
     }
@@ -81,6 +86,24 @@ class KeyedFormatSpec extends SparkSpec {
     try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
     assert(Snapshots.settings(fs, new Path(dir)).nbuckets.isEmpty)
     assertRefused(parent, dir)
+  }
+
+  test("an older version's _snap/pending crash journal is refused by every keyed write, and changes nothing") {
+    val parent = Files.createTempDirectory("kfmt-pending").toString
+    val dir = s"$parent/t"
+    Sinks.upsertCombine(spark, delta(1), Seq("k"),
+      Seq(sum(col("n")).as("n")), 0L, dir, nBuckets = 4)
+    // the journal an older version's keyed write left when it crashed
+    // after journaling, before its snapshot commit
+    val out = fs.create(new Path(s"$dir/_snap/pending"), true)
+    try out.write(("nbuckets 4\nreplaced __bucket=0/part-0.parquet\n" +
+      "merged __bucket=0/part-1.parquet").getBytes("UTF-8"))
+    finally out.close()
+    assertRefused(parent, dir, fix = "with the version that wrote it",
+      reads = false)
+    // reads still serve the last committed version
+    assert(rows(Sinks.readCombined(spark, dir)) ==
+      (0 until 20).map(k => k.toLong -> 1L).toMap)
   }
 
   test("Sinks.upgrade adopts a raw table with its sidecar count, idempotently; the next write merges exactly") {

@@ -26,13 +26,13 @@ import graft.SparkSpec
   *    pass, so readers of the two-commit-old generation keep their
   *    files;
   *  - (review pass) journaled flows are guarded at [[Snapshots
-  *    .writePending]] — BEFORE any install — and [[Snapshots
-  *    .commitPending]] completes unconditionally: once files are
-  *    installed the flip must land even if the ceiling moved, or the
-  *    heal loop would wedge on every writer entry. A real compaction
-  *    on an over-ceiling table (replace K originals with fewer merged
-  *    files, i.e. the prescribed remedy) journals, installs, and
-  *    commits. */
+  *    .snapOp]] — BEFORE the [[StagedCommit]] manifest freezes, so
+  *    before any install — and the manifest's commit phase completes
+  *    unconditionally: once files are installed the flip must land
+  *    even if the ceiling moved, or the heal loop would wedge on every
+  *    writer entry. A real compaction on an over-ceiling table
+  *    (replace K originals with fewer merged files, i.e. the
+  *    prescribed remedy) journals, installs, and commits. */
 class ManifestCeilingSpec extends SparkSpec {
 
   private def fs = new Path("/").getFileSystem(
@@ -148,12 +148,13 @@ class ManifestCeilingSpec extends SparkSpec {
       mkFiles(root, names)
       assert(Snapshots.commit(fs, root) == 1)
 
-      // a journaled GROWTH past the ceiling refuses at writePending —
-      // before any file was installed or deleted
+      // a journaled GROWTH past the ceiling refuses when its commit op
+      // is built — before the manifest freezes, so before any file was
+      // installed or deleted
       sys.props(Prop) = "8"
+      val head = Snapshots.head(fs, root).get
       val eg = intercept[IllegalArgumentException] {
-        Snapshots.writePending(fs, root, replaced = Nil,
-          merged = Seq("m0.parquet", "m1.parquet"))
+        Snapshots.snapOp(fs, root, head, replaced = Nil, added = 2)
       }
       assert(eg.getMessage.contains("manifest ceiling"), eg.getMessage)
 
@@ -163,12 +164,13 @@ class ManifestCeilingSpec extends SparkSpec {
       // would refuse a fresh growth (it runs with the guard off: the
       // files are already installed, refusal could only wedge heal)
       val replaced = names.drop(4)
-      Snapshots.writePending(fs, root, replaced = replaced,
-        merged = Seq("merged-0.parquet"))
+      val snap = Snapshots.snapOp(fs, root, head, replaced = replaced,
+        added = 1)
       mkFiles(root, Seq("merged-0.parquet"))
       replaced.foreach(r => fs.delete(new Path(root, r), false))
       sys.props(Prop) = "2" // ceiling moved mid-flight: still completes
-      Snapshots.commitPending(fs, root)
+      StagedCommit.publishOps(fs, new Path(root.getParent, "_staging"),
+        Seq(snap))
       assert(Snapshots.currentFiles(fs, root).get.size == 5,
         "the journaled compaction did not land")
       sys.props.remove(Prop)

@@ -2,6 +2,8 @@ package graft.apps
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -27,7 +29,8 @@ import graft.sinks.Sinks
   *    post-rebucket upserts hash against the new layout (and their
   *    bucket-pruned state reads stay exact);
   *  - a crash at any install stage heals to exactly old-everything or
-  *    new-everything — the pending journal carries the count;
+  *    new-everything — the install manifest's commit op carries the
+  *    count;
   *  - also pinned: the enforcement of the mart tier's stamp-scheme
   *    upgrade constraint (task #4 — a pre-doubled-stamp table replayed
   *    by this build fails loudly instead of double-applying). */
@@ -98,7 +101,7 @@ class RebucketSpec extends SparkSpec {
   }
 
   test("a crash at any rebucket stage heals to old-everything or new-everything") {
-    // crash points: before the pending journal's ops execute, and after
+    // crash points: before the install manifest's ops execute, and after
     // each of the first few install moves — the heal must land the
     // count and the layout TOGETHER every time
     Seq(-1, 0, 1, 3).foreach { k =>
@@ -253,6 +256,28 @@ class RebucketSpec extends SparkSpec {
     assert(liveCount == 40, "compaction changed the row multiset")
     assert(Snapshots.currentFiles(fs, root).get.length == 1,
       "the merged dir should hold one data file")
+  }
+
+  test("compaction refuses a snapshot group whose table has no manifest, and changes nothing") {
+    val base = Files.createTempDirectory("cmp-nomanifest")
+    val dir = base.toString + "/t"
+    (0 until 3).foreach { i =>
+      spark.range(i * 10, i * 10 + 10).toDF("id")
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+    def tree(): Set[String] = {
+      val walk = Files.walk(base)
+      try walk.iterator().asScala.map(base.relativize(_).toString).toSet
+      finally walk.close()
+    }
+    val before = tree()
+    val e = intercept[IllegalArgumentException] {
+      Compaction.compact(spark, fs, new Path(dir + "_stg"),
+        Seq(Compaction.Group(Seq(new Path(dir)), Seq(col("id")),
+          snapshotRoot = Some(new Path(dir)))), maxFiles = 1)
+    }
+    assert(e.getMessage.contains("no snapshot manifest"), e.getMessage)
+    assert(tree() == before, "a refused compaction changed the file tree")
   }
 
   test("recommendedBuckets sizes the layout from the pinned manifest's own bytes") {

@@ -133,7 +133,7 @@ class SnapshotIsolationSpec extends SparkSpec {
       assert(snapIds() == pre,
         "a torn compaction changed the snapshot-read row multiset")
 
-      // heal (compact entry heals manifest + pending journal), then the
+      // heal (compact entry heals the install manifest), then the
       // merge completes; the view is still exact
       VectorIndexApp.compactIndex(spark, fs, idx)
       assert(snapIds() == pre, "healed compaction changed the row multiset")

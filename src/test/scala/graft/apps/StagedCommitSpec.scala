@@ -194,6 +194,32 @@ class StagedCommitSpec extends SparkSpec {
     assert(!fs.exists(stg))
   }
 
+  test("a heal replaying a manifest whose moves and snapshot commit landed commits nothing twice") {
+    val base = Files.createTempDirectory("sc-snap").toString
+    val root = new Path(s"$base/t")
+    val stg = new Path(s"$base/_staging")
+    mkFile(new Path(root, "old-a"), "a")
+    mkFile(new Path(root, "old-b"), "b")
+    assert(Snapshots.commit(fs, root) == 1)
+    mkFile(new Path(stg, "merged"), "a+b")
+    StagedCommit.publishOps(fs, stg, Seq(
+      StagedCommit.Move(new Path(stg, "merged"), new Path(root, "merged")),
+      Snapshots.snapOp(fs, root, Snapshots.head(fs, root).get,
+        replaced = Seq("old-a", "old-b"), added = 1)))
+    val landed = Snapshots.head(fs, root).get
+    assert(landed.version == 2 && landed.data == Seq("merged") &&
+      landed.retired == Seq("old-a", "old-b"))
+    // the state a crash after the commit, before the staging delete,
+    // leaves: the frozen journal, every op of it already applied
+    mkFile(new Path(stg, "COMMIT"),
+      s"M\t${new Path(stg, "merged")}\t${new Path(root, "merged")}\n" +
+        s"S\t$root\t2\treplaced old-a\treplaced old-b\n")
+    StagedCommit.heal(fs, stg)
+    assert(Snapshots.head(fs, root).get == landed,
+      "the replayed heal committed again — a reader's grace window shrank")
+    assert(!fs.exists(stg))
+  }
+
   test("writer lock: a live holder blocks a second writer; a stale lease is taken over; release on every exit") {
     val root = new Path(Files.createTempDirectory("sc-lock").toString)
     val lock = new Path(root, "_writer.lock")
